@@ -17,9 +17,15 @@ analog needs a *deterministic total order*:
 from __future__ import annotations
 
 import base64
+import re
+from datetime import date
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DateType, IntegralType, StringType
+
+_ISO_DATE = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
+_INTEGER = re.compile(r"-?[0-9]+")
 
 
 def with_row_ids(df: DataFrame, order_by: list[str], id_col: str = "row_id") -> DataFrame:
@@ -40,11 +46,39 @@ def encode_cursor(*parts) -> str:
 
 
 def decode_cursor(cursor: str, n_parts: int) -> list[str]:
-    raw = base64.urlsafe_b64decode(cursor.encode()).decode()
+    try:
+        raw = base64.urlsafe_b64decode(cursor.encode()).decode()
+    except ValueError as exc:  # binascii.Error, UnicodeDecodeError
+        raise ValueError("malformed cursor: not base64 text") from exc
     parts = raw.split(":")
     if len(parts) != n_parts:
         raise ValueError(f"malformed cursor: expected {n_parts} parts")
     return parts
+
+
+def parse_cursor_part(part: str, key: str, dtype: DataType | None):
+    """One decoded cursor part as a literal of its key column's type.
+
+    Checked on the driver, so a forged cursor fails here with a
+    ValueError instead of inside a Spark cast: dates must be ISO
+    ``YYYY-MM-DD``, integer keys plain 64-bit integers, string keys
+    non-empty. Parts of other types pass through as strings for Spark
+    to cast.
+    """
+    try:
+        if isinstance(dtype, DateType):
+            if not _ISO_DATE.fullmatch(part):
+                raise ValueError(part)
+            return date.fromisoformat(part)
+        if isinstance(dtype, IntegralType):
+            if not _INTEGER.fullmatch(part) or not -(2**63) <= int(part) < 2**63:
+                raise ValueError(part)
+            return int(part)
+    except ValueError as exc:
+        raise ValueError(f"malformed cursor: bad {key} {part!r}") from exc
+    if isinstance(dtype, StringType) and not part:
+        raise ValueError(f"malformed cursor: empty {key}")
+    return part
 
 
 def keyset_predicate(keys: list[str], after: list) -> Column:
@@ -79,12 +113,19 @@ def keyset_page(
     Mirrors the reference's filter→sort→head chain
     (`api/app.py:147-159`) with its ≤1000 page cap (`api/app.py:131`).
     Returns (page_df, key_tuple_column) — the caller encodes the last
-    row's key tuple as the next cursor.
+    row's key tuple as the next cursor. A ``limit`` below 1 or a
+    malformed cursor raises ValueError before any Spark job runs.
     """
+    if limit < 1:
+        raise ValueError(f"limit must be at least 1, got {limit}")
     limit = min(limit, max_limit)
     out = df
     if cursor is not None:
-        after = decode_cursor(cursor, len(keys))
+        types = {f.name: f.dataType for f in df.schema.fields}
+        after = [
+            parse_cursor_part(part, k, types.get(k))
+            for k, part in zip(keys, decode_cursor(cursor, len(keys)))
+        ]
         out = out.filter(keyset_predicate(keys, after))
     out = out.orderBy(*[F.col(k) for k in keys]).limit(limit)
     return out, F.concat_ws(":", *[F.col(k).cast("string") for k in keys])

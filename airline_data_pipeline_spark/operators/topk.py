@@ -32,6 +32,32 @@ def top_k(
     return df.orderBy(*order).limit(k)
 
 
+def top_k_rows(
+    rows: list,
+    order_col: str,
+    k: int,
+    ascending: bool = False,
+    tiebreakers: list[str] | None = None,
+) -> list:
+    """`top_k` over rows already on the driver, in Spark's order:
+    ascending sorts put nulls first, descending ones put them last.
+
+    For driver-sized results that are collected anyway (per-route
+    aggregates, grouping-set counts): a driver sort costs no job.
+    """
+
+    def nulls_first(c: str):
+        return lambda r: (r[c] is not None, r[c])
+
+    out = list(rows)
+    for c in reversed(tiebreakers or []):
+        out.sort(key=nulls_first(c))
+    # stable: equal primaries keep the tiebreaker order; reverse=True
+    # turns nulls-first ascending into Spark's nulls-last descending
+    out.sort(key=nulls_first(order_col), reverse=not ascending)
+    return out[:k]
+
+
 def grouped_count_top_k(
     df: DataFrame,
     group_cols: list[str],

@@ -17,6 +17,9 @@ Scale design:
   partition-prunes;
 - metric outputs are group-by results (driver-sized), written as JSON
   summaries exactly like the reference's artifacts;
+- the sorted airport list that `queries.api.airports_list` serves is
+  derived from the route aggregate and stored as
+  `flights/_airports.json`, so serving it costs no scan;
 - a JDBC mirror of the warehouse table is optional (`jdbc_url`),
   replacing the reference's row-tuple insert loop with parallel
   batched writers.
@@ -51,6 +54,7 @@ from airline_data_pipeline_spark.queries.airline import (
     route_analysis,
     route_summary,
 )
+from airline_data_pipeline_spark.queries.api import write_airports_file
 
 REQUIRED_RAW_COLUMNS = [
     "FL_DATE", "OP_CARRIER", "ORIGIN", "DEST", "DEP_TIME", "ARR_TIME",
@@ -184,7 +188,13 @@ def run_pipeline(
         **performance_summary(per_airline),
         "airlines": airline_rows,
     }
-    routes = {"generated_at": stamp, **route_summary(per_route)}
+    # Routes are driver-sized: one collect feeds the route summary and
+    # the serving path's airport list, which changes only here.
+    route_rows = per_route.collect()
+    routes = {"generated_at": stamp, **route_summary(route_rows)}
+    airports = {r["origin"] for r in route_rows} | {r["destination"] for r in route_rows}
+    # nulls first, as the scan's orderBy sorts them
+    write_airports_file(flights_path, sorted(airports, key=lambda a: (a is not None, a)))
 
     os.makedirs(os.path.join(output_dir, "processed"), exist_ok=True)
     write_json_summary(metrics, os.path.join(output_dir, "processed", "flight_metrics.json"))

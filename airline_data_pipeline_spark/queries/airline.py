@@ -8,9 +8,9 @@ Semantics match the Postgres SQL at
 both are provided so users can pick either surface).
 
 Plan shape: partial hash-aggregate map-side → single shuffle on the
-grouping key → final aggregate → (for the top/bottom-k summaries)
-TakeOrderedAndProject. `count(when(cond, 1))` reproduces SQL
-`COUNT(CASE WHEN ...)` exactly — nulls don't count.
+grouping key → final aggregate. The top/bottom-k summaries rank the
+collected, driver-sized aggregate on the driver. `count(when(cond, 1))`
+reproduces SQL `COUNT(CASE WHEN ...)` exactly — nulls don't count.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from airline_data_pipeline_spark.operators.topk import top_k
+from airline_data_pipeline_spark.operators.topk import top_k_rows
 
 
 def airline_performance(flights: DataFrame) -> DataFrame:
@@ -126,21 +126,20 @@ def performance_summary(per_airline: DataFrame) -> dict:
     }
 
 
-def route_summary(per_route: DataFrame) -> dict:
+def route_summary(rows: list) -> dict:
     """Route rollup (`dags/flight_data_pipeline.py:214-218`):
-    top-10 routes by volume + 5 worst by on-time % (op A9)."""
-    top_routes = top_k(
-        per_route, "total_flights", 10, tiebreakers=["origin", "destination"]
-    ).collect()
-    worst = top_k(
-        per_route,
-        "ontime_percentage",
-        5,
-        ascending=True,
-        tiebreakers=["origin", "destination"],
-    ).collect()
+    top-10 routes by volume + 5 worst by on-time % (op A9).
+
+    ``rows`` is A7's output, collected: routes are driver-sized, so one
+    collect feeds both rankings and the count instead of three actions.
+    Ties break on (origin, destination), nulls first, as `top_k` does
+    in Spark.
+    """
+    keys = ["origin", "destination"]
+    top_routes = top_k_rows(rows, "total_flights", 10, tiebreakers=keys)
+    worst = top_k_rows(rows, "ontime_percentage", 5, ascending=True, tiebreakers=keys)
     return {
-        "total_routes": per_route.count(),
+        "total_routes": len(rows),
         "top_routes": [r.asDict() for r in top_routes],
         "worst_performing_routes": [r.asDict() for r in worst],
     }

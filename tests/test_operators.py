@@ -28,6 +28,7 @@ from airline_data_pipeline_spark.operators.dedup import (
     minhash_candidates,
     simhash_near_dups,
 )
+from airline_data_pipeline_spark.operators.topk import top_k, top_k_rows
 from airline_data_pipeline_spark.operators.validation import (
     ValidationError,
     expect,
@@ -497,6 +498,25 @@ def test_delay_naive_vs_corrected(spark):
     ).collect()
     assert [r["naive"] for r in out] == [44.0, -2340.0, 5.0]
     assert [r["corrected"] for r in out] == [4, 20, 5]
+
+
+# ---------------------------------------------------------------------------
+# top-k determinism: the driver-side ranking keeps Spark's order
+# ---------------------------------------------------------------------------
+@pytest.mark.parametrize("ascending", [False, True])
+def test_top_k_rows_matches_spark_top_k(spark, ascending):
+    """Ties on the primary key, and nulls in it and in the tiebreakers:
+    Spark sorts ascending nulls first and descending nulls last."""
+    df = spark.createDataFrame(
+        [
+            (3, "b", "x"), (3, "a", "y"), (3, "a", None), (None, "c", "x"),
+            (1, None, "z"), (1, "a", "x"), (None, None, None), (2, "b", "b"),
+        ],
+        "n int, k1 string, k2 string",
+    )
+    want = top_k(df, "n", 6, ascending=ascending, tiebreakers=["k1", "k2"]).collect()
+    got = top_k_rows(df.collect(), "n", 6, ascending=ascending, tiebreakers=["k1", "k2"])
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
