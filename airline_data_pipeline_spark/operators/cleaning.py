@@ -27,9 +27,12 @@ def null_fractions(df: DataFrame, columns: list[str] | None = None) -> dict[str,
     `avg(isNull)` does the count and the divide in one shuffle-free
     partial+final aggregate. At 100 TB, prefer running this on a
     sampled fraction or on Parquet footer null-counts; exactness only
-    matters near the threshold.
+    matters near the threshold. ``columns=None`` profiles every
+    column; an empty list profiles none and runs no job.
     """
-    cols = columns or df.columns
+    cols = df.columns if columns is None else columns
+    if not cols:
+        return {}
     row = df.select(
         [F.avg(F.col(c).isNull().cast("double")).alias(c) for c in cols]
     ).first()
@@ -48,10 +51,14 @@ def drop_mostly_null(
 
     ``protect`` columns survive regardless of null fraction — used for
     downstream contract columns (a cancelled-heavy day must not drop
-    ARR_TIME and break the projection).
+    ARR_TIME and break the projection). With nothing left to drop, ``df``
+    comes back unchanged and no job runs.
     """
     protected = set(protect or [])
-    fractions = null_fractions(df, [c for c in df.columns if c not in protected])
+    droppable = [c for c in df.columns if c not in protected]
+    if not droppable:
+        return df
+    fractions = null_fractions(df, droppable)
     kept = [c for c in df.columns if c in protected or fractions[c] <= threshold]
     return df.select(*kept)
 

@@ -113,40 +113,83 @@ def expect(
     both one-liners.
     """
     row = validation_profile(df, not_null, value_range, allowed_values).first()
-
-    failures: list[str] = []
-    checked = 0
-    if non_empty:
-        checked += 1
-        if row["__n"] == 0:
-            failures.append("dataframe is empty")
-    for c in not_null or []:
-        checked += 1
-        n = row[f"__null__{c}"]
-        if n and n > 0:
-            failures.append(f"{c}: {n} null values")
-    for c, (lo, hi) in (value_range or {}).items():
-        checked += 1
-        mn, mx = row[f"__min__{c}"], row[f"__max__{c}"]
-        if mn is not None and (mn < lo or mx > hi):
-            failures.append(f"{c}: range [{mn}, {mx}] outside [{lo}, {hi}]")
-    for c in (allowed_values or {}):
-        checked += 1
-        n = row[f"__bad__{c}"]
-        if n and n > 0:
-            failures.append(f"{c}: {n} values outside allowed set")
-    result = ExpectationResult(not failures, failures, checked)
-    if failures and on_failure is not None:
-        on_failure(list(failures))
+    result = counter_failures(
+        row.asDict(), PROFILE_NAMES, not_null, value_range, allowed_values, non_empty
+    )
+    if result.failures and on_failure is not None:
+        on_failure(list(result.failures))
     if raise_on_failure:
         result.raise_if_failed()
     return result
 
 
-def validate_processed_flights(df: DataFrame) -> ExpectationResult:
+# Counter names per kind ("n", "null", "min", "max", "bad"), formatted
+# with the column: the `validation_profile` row and the `observed`
+# Observation name the same counters differently.
+PROFILE_NAMES = {
+    "n": "__n", "null": "__null__{}", "min": "__min__{}", "max": "__max__{}",
+    "bad": "__bad__{}",
+}
+OBSERVED_NAMES = {"n": "n_rows", "null": "null_{}", "bad": "bad_{}"}
+
+
+def counter_failures(
+    counters: dict,
+    names: dict[str, str],
+    not_null: list[str] | None = None,
+    value_range: dict[str, tuple[float, float]] | None = None,
+    allowed_values: dict[str, list] | None = None,
+    non_empty: bool = False,
+) -> ExpectationResult:
+    """The failure messages for counters already computed — by
+    `validation_profile` (``names=PROFILE_NAMES``) or by an `observed`
+    write (``names=OBSERVED_NAMES``; it counts no ranges). Driver-side,
+    no job."""
+    def get(kind: str, c: str = ""):
+        return counters[names[kind].format(c)]
+
+    failures: list[str] = []
+    checked = 0
+    if non_empty:
+        checked += 1
+        if get("n") == 0:
+            failures.append("dataframe is empty")
+    for c in not_null or []:
+        checked += 1
+        n = get("null", c)
+        if n and n > 0:
+            failures.append(f"{c}: {n} null values")
+    for c, (lo, hi) in (value_range or {}).items():
+        checked += 1
+        mn, mx = get("min", c), get("max", c)
+        if mn is not None and (mn < lo or mx > hi):
+            failures.append(f"{c}: range [{mn}, {mx}] outside [{lo}, {hi}]")
+    for c in (allowed_values or {}):
+        checked += 1
+        n = get("bad", c)
+        if n and n > 0:
+            failures.append(f"{c}: {n} values outside allowed set")
+    return ExpectationResult(not failures, failures, checked)
+
+
+# The data half of the contract, as `expect`/`observed` keyword args.
+PROCESSED_CHECKS = {
+    "not_null": ["airline", "origin", "destination"],
+    "allowed_values": {"flight_status": ["On Time", "Delayed"]},
+}
+
+
+def validate_processed_flights(
+    df: DataFrame, observed_counters: dict | None = None
+) -> ExpectationResult:
     """The reference's post-transform contract (`process.py:78-123`)
     expressed through the engine surface: required columns + dtypes
-    (no job) and null/range checks (one job)."""
+    (no job) and null/status-set/non-empty checks.
+
+    Standalone, the data checks cost one aggregate job over ``df``.
+    `run_pipeline` instead observes ``PROCESSED_CHECKS`` on its
+    warehouse write and passes those counters as ``observed_counters``
+    (`OBSERVED_NAMES`): the same failures, with no job of its own."""
     r1 = require_columns(
         df,
         ["flight_date", "airline", "flight_number", "origin", "destination",
@@ -154,12 +197,12 @@ def validate_processed_flights(df: DataFrame) -> ExpectationResult:
     )
     if not r1.passed:
         return r1
-    r2 = expect(
-        df,
-        not_null=["airline", "origin", "destination"],
-        allowed_values={"flight_status": ["On Time", "Delayed"]},
-        non_empty=True,
-    )
+    if observed_counters is None:
+        r2 = expect(df, non_empty=True, **PROCESSED_CHECKS)
+    else:
+        r2 = counter_failures(
+            observed_counters, OBSERVED_NAMES, non_empty=True, **PROCESSED_CHECKS
+        )
     return ExpectationResult(
         r1.passed and r2.passed, r1.failures + r2.failures, r1.checked + r2.checked
     )
@@ -170,6 +213,7 @@ def observed(
     name: str,
     not_null: list[str] | None = None,
     value_range: dict[str, tuple[float, float]] | None = None,
+    allowed_values: dict[str, list] | None = None,
     extra: list | None = None,
 ):
     """Inline validation metrics via Spark's Observation API (U2, the
@@ -185,7 +229,9 @@ def observed(
 
     Returns ``(observed_df, observation)``; read
     ``observation.get`` (blocks until the next action completes) for
-    ``{"n_rows": ..., "null_<col>": ..., "oob_<col>": ...}``.
+    ``{"n_rows": ..., "null_<col>": ..., "oob_<col>": ...,
+    "bad_<col>": ...}`` (`OBSERVED_NAMES`; `counter_failures` turns
+    them into `expect`'s messages).
     """
     from pyspark.sql import Observation
 
@@ -199,6 +245,12 @@ def observed(
             F.count(
                 F.when((F.col(c) < lo) | (F.col(c) > hi), 1)
             ).alias(f"oob_{c}")
+        )
+    for c, allowed in (allowed_values or {}).items():
+        metrics.append(
+            F.count(
+                F.when(~F.col(c).isin(allowed) & F.col(c).isNotNull(), 1)
+            ).alias(f"bad_{c}")
         )
     # Caller-supplied aggregate expressions (each must carry an alias) —
     # e.g. a stage-specific enrichment-match counter.

@@ -8,17 +8,31 @@ Semantics match the Postgres SQL at
 both are provided so users can pick either surface).
 
 Plan shape: partial hash-aggregate map-side → single shuffle on the
-grouping key → final aggregate. The top/bottom-k summaries rank the
-collected, driver-sized aggregate on the driver. `count(when(cond, 1))`
+grouping key → final aggregate. `airline_route_rows` computes A6 and
+A7 in ONE grouping-sets pass for the pipeline; the summaries and
+rankings run on those collected, driver-sized rows on the driver. `count(when(cond, 1))`
 reproduces SQL `COUNT(CASE WHEN ...)` exactly — nulls don't count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from airline_data_pipeline_spark.operators.topk import top_k_rows
+
+AIRLINE_COLUMNS = [
+    "airline", "total_flights", "avg_departure_delay", "avg_arrival_delay",
+    "delayed_flights", "ontime_flights", "ontime_percentage",
+]
+ROUTE_COLUMNS = [
+    "origin", "destination", "total_flights", "avg_departure_delay",
+    "avg_arrival_delay", "delayed_flights", "ontime_percentage",
+]
+ROUTE_KEYS = ["origin", "destination"]
+# grouping_id() over (airline, origin, destination): bit set = column
+# aggregated away, first column in the highest bit
+_AIRLINE_SET, _ROUTE_SET = 0b011, 0b100
 
 
 def airline_performance(flights: DataFrame) -> DataFrame:
@@ -105,24 +119,59 @@ def route_analysis(flights: DataFrame) -> DataFrame:
     )
 
 
-def performance_summary(per_airline: DataFrame) -> dict:
+def airline_route_rows(flights: DataFrame) -> tuple[list, list]:
+    """A6 and A7 in ONE aggregate: `groupingSets` over ``airline`` and
+    (origin, destination), collected once.
+
+    Returns ``(airline_rows, route_rows)``, each equal to
+    `airline_performance(flights).collect()` /
+    `route_analysis(flights).collect()`: same columns, rounding and
+    order (total_flights desc, then the keys asc with nulls first,
+    sorted on the driver).
+    """
+    delayed = F.count(F.when(F.col("flight_status") == "Delayed", 1))
+    ontime = F.count(F.when(F.col("flight_status") == "On Time", 1))
+    total = F.count(F.lit(1))
+    rows = (
+        flights.groupingSets([["airline"], ROUTE_KEYS], "airline", *ROUTE_KEYS)
+        .agg(
+            F.grouping_id().alias("__set"),
+            total.alias("total_flights"),
+            F.round(F.avg("departure_delay"), 2).alias("avg_departure_delay"),
+            F.round(F.avg("arrival_delay"), 2).alias("avg_arrival_delay"),
+            delayed.alias("delayed_flights"),
+            ontime.alias("ontime_flights"),
+            F.round(ontime / total * 100, 2).alias("ontime_percentage"),
+        )
+        .collect()
+    )
+
+    def shaped(group: int, columns: list[str], keys: list[str]) -> list:
+        row = Row(*columns)
+        out = [row(*(r[c] for c in columns)) for r in rows if r["__set"] == group]
+        return top_k_rows(out, "total_flights", len(out), tiebreakers=keys)
+
+    return (
+        shaped(_AIRLINE_SET, AIRLINE_COLUMNS, ["airline"]),
+        shaped(_ROUTE_SET, ROUTE_COLUMNS, ROUTE_KEYS),
+    )
+
+
+def performance_summary(rows: list) -> dict:
     """Two-level rollup over A6's output (op A8).
 
     Reference composes `total_flights.sum()` / overall on-time % from
     the per-airline frame (`dags/flight_data_pipeline.py:168-174`).
-    One second-level aggregate job; result is driver-sized.
+    ``rows`` is A6's output, collected: the sums run on the driver, and
+    int/int true division gives Spark's double division below 2^53.
+    No flights: zero totals and a None percentage.
     """
-    row = per_airline.agg(
-        F.sum("total_flights").alias("total_flights"),
-        F.sum("delayed_flights").alias("total_delayed_flights"),
-        (F.sum("ontime_flights") / F.sum("total_flights") * 100).alias(
-            "overall_ontime_percentage"
-        ),
-    ).first()
+    total = sum(r["total_flights"] for r in rows)
+    ontime = sum(r["ontime_flights"] for r in rows)
     return {
-        "total_flights": int(row["total_flights"]),
-        "total_delayed_flights": int(row["total_delayed_flights"]),
-        "overall_ontime_percentage": float(row["overall_ontime_percentage"]),
+        "total_flights": total,
+        "total_delayed_flights": sum(r["delayed_flights"] for r in rows),
+        "overall_ontime_percentage": ontime / total * 100 if total else None,
     }
 
 
@@ -135,9 +184,10 @@ def route_summary(rows: list) -> dict:
     Ties break on (origin, destination), nulls first, as `top_k` does
     in Spark.
     """
-    keys = ["origin", "destination"]
-    top_routes = top_k_rows(rows, "total_flights", 10, tiebreakers=keys)
-    worst = top_k_rows(rows, "ontime_percentage", 5, ascending=True, tiebreakers=keys)
+    top_routes = top_k_rows(rows, "total_flights", 10, tiebreakers=ROUTE_KEYS)
+    worst = top_k_rows(
+        rows, "ontime_percentage", 5, ascending=True, tiebreakers=ROUTE_KEYS
+    )
     return {
         "total_routes": len(rows),
         "top_routes": [r.asDict() for r in top_routes],

@@ -4,8 +4,10 @@ reference-parity tests."""
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -25,6 +27,24 @@ def require_sf(path: str) -> str:
     if not os.path.isdir(path):
         pytest.skip(f"testdata dir missing: {path}")
     return path
+
+
+_job_groups = itertools.count()
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Collects the ids of the Spark jobs run inside the block."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session", autouse=True)

@@ -6,10 +6,8 @@ file that `run_pipeline` writes, and Spark job counts per request."""
 from __future__ import annotations
 
 import base64
-import itertools
 import os
 import shutil
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,24 +22,7 @@ from airline_data_pipeline_spark.queries.api import (
     flights_page,
     metrics_summary,
 )
-
-_groups = itertools.count()
-
-
-@contextmanager
-def spark_jobs(spark):
-    """Collects the ids of the Spark jobs run inside the block."""
-    sc = spark.sparkContext
-    group = f"test-api-jobs-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
+from tests.conftest import spark_jobs
 
 def scan_airports(flights):
     """The union-distinct scan `airports_list` falls back to."""

@@ -34,6 +34,7 @@ from airline_data_pipeline_spark.operators.validation import (
     expect,
     require_types,
 )
+from tests.conftest import spark_jobs
 
 
 # ---------------------------------------------------------------------------
@@ -361,6 +362,20 @@ def test_drop_mostly_null_thresholds(spark):
     assert fr["a"] == 0.0 and abs(fr["b"] - 0.1) < 1e-9 and abs(fr["c"] - 0.75) < 1e-9
     assert drop_mostly_null(df, 0.7).columns == ["a", "b"]
     assert drop_mostly_null(df, 0.05).columns == ["a"]
+
+
+def test_nothing_to_profile_runs_no_job(spark):
+    """An empty column list profiles no column (not every column), and
+    a drop with every column protected is a no-op: zero Spark jobs."""
+    df = spark.createDataFrame([(1, None), (2, None)], "a long, b long")
+    with spark_jobs(spark) as jobs:
+        assert null_fractions(df, []) == {}
+        assert drop_mostly_null(df, 0.7, protect=["a", "b"]) is df
+    assert jobs == []
+    # the profile still runs, and drops, when a column is droppable
+    with spark_jobs(spark) as jobs:
+        assert drop_mostly_null(df, 0.7, protect=["a"]).columns == ["a"]
+    assert len(jobs) >= 1
 
 
 def test_expect_single_pass_and_raise(spark):
