@@ -202,67 +202,6 @@ def repetition_ratio(text: Column, k: int = 3) -> Column:
     )
 
 
-# PII scrub patterns, ordered: more-specific patterns first so e.g. an
-# SSN is tagged [SSN] rather than half-eaten by the looser phone regex,
-# and an email's digit-bearing local part never matches as a phone.
-# Java-regex syntax (evaluated JVM-side by regexp_replace/regexp_count).
-PII_PATTERNS: dict[str, str] = {
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "ssn": r"\b\d{3}-\d{2}-\d{4}\b",
-    "ipv4": r"\b(?:\d{1,3}\.){3}\d{1,3}\b",
-    "phone": r"(?<![\d.])\+?\d[\d\-\s()]{7,}\d(?![\d.])",
-}
-
-
-def redact_pii(text: Column, kinds: list[str] | None = None) -> Column:
-    """Replace PII spans with typed placeholder tokens ([EMAIL], [SSN],
-    [IPV4], [PHONE]) — the standard pre-training scrub stage.
-
-    A chain of JVM-side `regexp_replace` calls in `PII_PATTERNS` order
-    (insertion order carries the precedence contract above); one codegen
-    stage, no Python boundary, no shuffle — row-local and linear in text
-    size, so it composes with any scan at any scale.
-
-    ``kinds=None`` (the default) redacts every kind. An EMPTY kinds
-    list is rejected with ValueError: a redact call that redacts
-    nothing is almost certainly a caller bug, and for a scrub stage
-    the failure mode of silently shipping unredacted text is the one
-    to fail loudly on (an earlier revision treated [] as "all kinds",
-    so both silent readings have burned someone).
-    """
-    if kinds is not None:
-        if not kinds:
-            raise ValueError(
-                "kinds=[] would redact nothing; pass None to redact all "
-                "kinds, or a non-empty subset of "
-                f"{sorted(PII_PATTERNS)}"
-            )
-        unknown = set(kinds) - set(PII_PATTERNS)
-        if unknown:
-            raise ValueError(f"unknown PII kinds: {sorted(unknown)}")
-    out = text
-    # Iterate PII_PATTERNS (not the caller's list) so the declared
-    # precedence holds regardless of the order `kinds` was passed in —
-    # kinds=['phone','ssn'] must not let the phone regex half-eat SSNs.
-    for kind in PII_PATTERNS if kinds is None else [
-        k for k in PII_PATTERNS if k in kinds
-    ]:
-        out = F.regexp_replace(out, PII_PATTERNS[kind], f"[{kind.upper()}]")
-    return out
-
-
-def pii_counts(text: Column) -> Column:
-    """Per-kind PII hit counts as a struct (audit/telemetry side of the
-    scrub): count BEFORE redaction, same patterns, same precedence —
-    run on a sample to size the scrub's impact before committing it."""
-    redacted_so_far = text
-    fields = []
-    for kind, pat in PII_PATTERNS.items():
-        fields.append(F.regexp_count(redacted_so_far, F.lit(pat)).alias(f"n_{kind}"))
-        redacted_so_far = F.regexp_replace(redacted_so_far, pat, " ")
-    return F.struct(*fields)
-
-
 # The Gopher/MassiveText "required word" sublist (Rae et al. 2021,
 # §A1.1.2): a document must contain at least 2 of these to pass the
 # stop-word rule. Distinct from _EN_STOPWORDS (the language-ID list).

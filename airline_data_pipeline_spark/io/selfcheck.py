@@ -12,7 +12,7 @@ rows: it reads the parquet footer of every testdata table with pyarrow
 naming the file and the offending type if an encoding outside the
 normalizer's contract appears.
 
-Called from `tests/conftest.py` (session autouse) and `bench.py` startup.
+Called from `tests/conftest.py` (session autouse).
 """
 
 from __future__ import annotations

@@ -60,82 +60,6 @@ def write_parquet_clustered(
     out.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
 
 
-def write_parquet_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int = 16,
-    bits: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order (Morton-curve) clustered parquet layout for N numeric
-    columns — multi-dimensional data skipping.
-
-    1D range clustering (`write_parquet_clustered`) gives perfect
-    pruning on one column and none on the others; interleaving the bits
-    of every column's min/max-quantized rank gives each file a compact
-    BOX in the n-dim key space, so footer stats prune range predicates
-    on ANY of the columns (each to ~(1/num_files)^(1/n) of its range
-    instead of all of it) — the Delta/Iceberg OPTIMIZE ZORDER
-    technique, as plain Spark expressions. The quantization stats ride
-    in a broadcast 1-row join; the bit interleave is a fixed chain of
-    bits×n shift/mask terms, comfortably inside whole-stage codegen.
-
-    ``bits`` defaults to 62 // n — the interleaved key stays inside a
-    signed int64 at any column count; precision beyond ~16 bits per
-    column is irrelevant for file-level skipping anyway.
-    """
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    assert n >= 2, "use write_parquet_clustered for 1-D"
-    if bits is None:
-        bits = min(16, 62 // n)
-    assert bits * n <= 62, f"{bits} bits x {n} cols overflows the int64 z-key"
-    xs = [F.col(c).cast("double") for c in cols]
-    stats = df.agg(
-        *[
-            agg
-            for i, x in enumerate(xs)
-            for agg in (F.min(x).alias(f"__lo{i}"), F.max(x).alias(f"__hi{i}"))
-        ]
-    )
-    top = (1 << bits) - 1
-
-    def quant(v, lo, hi):
-        # A constant column (hi == lo) would make the bucket width 0 and
-        # the division null; `least` ignores nulls, silently sending
-        # every row to the top bucket. Quantize constants to 0 instead —
-        # clustering degrades to the varying columns.
-        return F.when(
-            hi > lo,
-            F.least(
-                F.lit(top),
-                F.floor((v - lo) / ((hi - lo) / (1 << bits))).cast("long"),
-            ),
-        ).otherwise(F.lit(0).cast("long"))
-
-    with_stats = df.join(F.broadcast(stats))
-    qs = [
-        quant(x, F.col(f"__lo{i}"), F.col(f"__hi{i}")) for i, x in enumerate(xs)
-    ]
-    morton = F.lit(0).cast("long")
-    for b in range(bits):
-        for i, q in enumerate(qs):
-            morton = morton + F.shiftleft(
-                F.shiftright(q, b).bitwiseAND(F.lit(1)), n * b + i
-            )
-    stat_cols = [f"__{side}{i}" for i in range(n) for side in ("lo", "hi")]
-    (
-        with_stats.withColumn("__z", morton)
-        .repartitionByRange(num_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z", *stat_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,
@@ -182,33 +106,6 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
-
-
-def compact_parquet(
-    spark,
-    src: str,
-    dest: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction (table maintenance op).
-
-    Streaming sinks and fine-grained ingest leave thousands of KB-sized
-    files; at scale that turns every scan into a file-listing + footer
-    storm and starves the scheduler with sliver tasks. This rewrites
-    ``src`` into ``dest`` at ~``target_file_bytes`` per file using
-    `coalesce` (narrow — merges files without shuffling rows). Sizing
-    reads the source through the Hadoop FileSystem API, so it works on
-    HDFS/S3/local alike. Returns the number of output files.
-    """
-    import math
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(src)
-    total_bytes = jpath.getFileSystem(hconf).getContentSummary(jpath).getLength()
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    spark.read.parquet(src).coalesce(n_files).write.mode("overwrite").parquet(dest)
-    return n_files
 
 
 def replace_parquet_dir(spark, tmp: str, live: str) -> None:

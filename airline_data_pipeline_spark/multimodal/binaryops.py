@@ -129,20 +129,6 @@ def extract_features(
     )
 
 
-def dedup_media_exact(media: DataFrame) -> DataFrame:
-    """Exact payload dedup on the binary column.
-
-    sha-256 via Spark's built-in (JVM-side, no Python): group on the
-    digest, keep min media_id — same shape as text exact-dedup, and the
-    shuffle carries 32-byte digests, never payloads.
-    """
-    from pyspark.sql import functions as F
-
-    hashed = media.withColumn("__h", F.sha2(F.col("payload"), 256))
-    keep = hashed.groupBy("__h").agg(F.min("media_id").alias("media_id"))
-    return hashed.join(keep, on=["__h", "media_id"], how="left_semi").drop("__h")
-
-
 FRAMES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

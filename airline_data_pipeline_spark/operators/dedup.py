@@ -81,14 +81,6 @@ def dedup_exact_text(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     return dedup_exact(with_fp, ["__fp"], id_col).drop("__fp")
 
 
-def dedup_against_reference(
-    df: DataFrame, reference: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Rows of df whose key does not appear in `reference` (anti-join,
-    op J3) — the 'remove everything already in the training set' op."""
-    return df.join(reference.select(*key_cols), on=key_cols, how="left_anti")
-
-
 def _reuse(df: DataFrame) -> DataFrame:
     """Materialize a derived SELF-JOIN input once (lazy localCheckpoint)
     so both join sides read the same RDD blocks.
@@ -109,9 +101,6 @@ def _reuse(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash + banded LSH
 # ---------------------------------------------------------------------------
-_MAX_LONG = (1 << 63) - 1
-
-
 def shingle_sets(
     df: DataFrame,
     text_col: str = "text",
@@ -136,26 +125,6 @@ def shingle_sets(
     )
 
 
-def minhash_signature(hashed_shingle_col, num_hashes: int = 32):
-    """array<bigint> minhash signature in ONE pass over hashed shingles.
-
-    fold(sh, [MAX..], (acc, s) -> zip_with(acc, rehash_i(s), least)).
-    Row-shaped convenience form; NOTE that Spark evaluates higher-order
-    functions (aggregate/zip_with lambdas) INTERPRETED, outside
-    whole-stage codegen — profiled at ~1.4 s for 270k shingles × 32
-    hashes at sf0.1, which is why the hot path (`_banded_buckets`) uses
-    the codegen'd explode + groupBy-min formulation below instead.
-    Kept for signature-at-hand use on already-exploded data.
-    """
-    init = F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_hashes)
-
-    def step(acc, s):
-        hashes = F.array(*[F.xxhash64(F.lit(i), s) for i in range(num_hashes)])
-        return F.zip_with(acc, hashes, lambda a, h: F.least(a, h))
-
-    return F.aggregate(hashed_shingle_col, init, step)
-
-
 def _banded_buckets(
     sh: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
@@ -168,8 +137,9 @@ def _banded_buckets(
     `min(xxhash64(seed, s))` aggregate per seed: every expression stays
     inside whole-stage codegen with map-side partial aggregation (the
     shuffle carries one 32-long partial signature per doc per map
-    partition). The equivalent array-fold (`minhash_signature`) is
-    interpreted per-row and measured ~5× slower on the same data; the
+    partition). The equivalent per-row array fold (`aggregate` +
+    `zip_with` over the shingle array) runs interpreted, outside
+    whole-stage codegen, and measured ~5× slower on the same data; the
     min-per-seed values are identical, so candidates don't change.
     Docs with zero shingles drop out here (no rows to explode) — they
     can only pair with other empty docs, and those pairs are removed by
@@ -1452,76 +1422,9 @@ def connected_components(
     return labels.select(id_col, "cluster_id")
 
 
-def dedup_connected(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cluster-aware dedup: keep the minimum-id row of every connected
-    near-dup component (one survivor per cluster, transitively)."""
-    labels = connected_components(df.select(id_col), pairs, id_col)
-    keep = labels.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
-    return df.join(keep, id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-def simhash64(text_col, n_bits: int = 64, token_hash=F.xxhash64) -> F.Column:
-    """n-bit SimHash of the whitespace tokens — pure expressions.
-
-    Row-shaped convenience form, NOT the hot path: `F.aggregate` steps
-    evaluate INTERPRETED with no common-subexpression elimination, so
-    the per-token hash in the vote tree is recomputed once PER BIT —
-    with the md5-based portable hash that is ~60 md5s per token
-    (measured 25-57 s over sf0.1's 5k docs). `simhash_near_dups` uses
-    the codegen'd DataFrame formulation `simhash_fingerprints` below
-    (explode → hash once → vote aggregates; 3.4 s, value-identical).
-    Kept for fingerprint-at-hand use on small/derived columns, same as
-    `minhash_signature` above.
-
-    Per token: hash → n sign contributions (+1/-1 per bit) in one
-    aggregate pass; the sign of each per-bit vote sum is the
-    fingerprint bit. Near-dups differ in few bits (small Hamming
-    distance). Shift amounts must be Python ints (Spark's shiftright
-    takes no Column), hence the unrolled arrays.
-
-    Defaults: 64 bits over xxhash64 (the fast engine-internal path).
-    The oracle-checked suite query uses ``n_bits=60,
-    token_hash=portable_hash60`` — a hash any md5-capable engine
-    reproduces, so DuckDB can recompute the identical fingerprint from
-    first principles (60 bits keeps every power-of-two positive, no
-    two's-complement special case on either engine).
-    """
-    toks = tokens(F.lower(text_col))
-    zero = F.array_repeat(F.lit(0), n_bits)
-
-    def step(acc, t):
-        h = token_hash(t)
-        bits = F.array(
-            *[
-                F.when(F.shiftright(h, k).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                for k in range(n_bits)
-            ]
-        )
-        return F.zip_with(acc, bits, lambda a, b: a + b)
-
-    votes = F.aggregate(toks, zero, step)
-    # Assemble the long from sign bits with one shallow zip_with+sum —
-    # a 64-deep OR chain generates pathological codegen.
-    powers = F.array(
-        *[
-            F.lit((1 << k) if k < 63 else -(1 << 63)).cast("long")  # two's complement sign bit
-            for k in range(n_bits)
-        ]
-    )
-    return F.aggregate(
-        F.zip_with(votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def hamming64(a, b) -> F.Column:
     """Hamming distance between two 64-bit longs: popcount(a XOR b)."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -1539,25 +1442,23 @@ def simhash_fingerprints(
     doc; the fingerprint assembles from the vote signs. Returns
     (id_col, __sim).
 
-    This is the whole-stage-codegen reformulation of the `simhash64`
-    column fold — the same lesson as the round-5 MinHash rewrite.
-    `F.aggregate` is a CodegenFallback: every fold step is interpreted,
-    and because interpreted HOFs do no common-subexpression
-    elimination, the per-token hash inside the step tree is recomputed
-    ONCE PER BIT — with the portable md5-based hash that is 60 md5
-    evaluations per token (~15M md5s over sf0.1's 5k docs; measured
-    25-57 s). Here each token is hashed once in a codegen'd projection
-    and the 60 vote columns are plain aggregates (map-side combined,
-    one shuffle on id): the full near-dup query drops to 3.4 s warm at
-    sf0.1 — ~10× — with value-identical votes (integer ±1 sums are
-    order-independent).
-    Docs with no tokens keep the all-zero-votes fingerprint (0) via
-    the left join. NULL-text divergence from `simhash64`: a NULL doc
-    also lands on 0 here (the left join treats it like any token-less
-    doc), where `simhash64` propagates NULL — this matches the
-    oracle's COALESCE(sim, 0) and is the intended near-dup semantics
-    (null and empty docs cluster together), so the forms are
-    value-identical only over non-NULL text.
+    This is the whole-stage-codegen form of SimHash — the same lesson
+    as the round-5 MinHash rewrite. A per-row column fold
+    (`F.aggregate` over the token array) is a CodegenFallback: every
+    fold step is interpreted, and because interpreted HOFs do no
+    common-subexpression elimination, the per-token hash inside the
+    step tree is recomputed ONCE PER BIT — with the portable md5-based
+    hash that is 60 md5 evaluations per token (~15M md5s over sf0.1's
+    5k docs; measured 25-57 s). Here each token is hashed once in a
+    codegen'd projection and the 60 vote columns are plain aggregates
+    (map-side combined, one shuffle on id): the full near-dup query
+    drops to 3.4 s warm at sf0.1 — ~10× — with value-identical votes
+    (integer ±1 sums are order-independent).
+    Docs with no tokens — empty or whitespace-only text — keep the
+    all-zero-votes fingerprint (0) via the left join, and a NULL doc
+    lands on 0 the same way (it explodes to no tokens). This matches
+    the oracle's COALESCE(sim, 0) and is the intended near-dup
+    semantics: null and empty docs cluster together.
     """
     hashed = df.select(
         F.col(id_col),

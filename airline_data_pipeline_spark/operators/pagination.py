@@ -1,17 +1,15 @@
-"""Keyset pagination with stable row ids (SURVEY.md P6, W1, O1, O2, O5).
+"""Keyset pagination (SURVEY.md P6, O1, O2, O5).
 
 The reference's API paginates with `reset_index()` row numbers and a
 base64 `date:index` cursor (`api/app.py:46-58,134,147-168`) — stable
 only because the data is one CSV read in fixed order. The distributed
-analog needs a *deterministic total order*:
-
-- `with_row_ids` assigns `row_number()` over an explicit ordering
-  (never `monotonically_increasing_id`, which is partition-layout
-  dependent and unfit for cursors).
-- At scale, prefer pure keyset pagination on a natural key
-  (`flight_date, flight_number, origin`): the cursor predicate prunes
-  partitions and the global row_number sort disappears entirely —
-  `keyset_page` implements that path.
+analog needs a *deterministic total order* without a global row
+number (a single-partition `row_number()` window, or
+`monotonically_increasing_id`, which is partition-layout dependent and
+unfit for cursors): keyset pagination on a natural key
+(`flight_date, flight_number, origin`), where the cursor predicate
+prunes partitions and no global sort runs — `keyset_page` implements
+that path.
 """
 
 from __future__ import annotations
@@ -20,23 +18,12 @@ import base64
 import re
 from datetime import date
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, DateType, IntegralType, StringType
 
 _ISO_DATE = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
 _INTEGER = re.compile(r"-?[0-9]+")
-
-
-def with_row_ids(df: DataFrame, order_by: list[str], id_col: str = "row_id") -> DataFrame:
-    """Deterministic row ids via row_number over a total order (W1).
-
-    The single-partition window is the price of a *global* dense id —
-    acceptable for serving-sized (post-filter) data, wrong for bulk
-    data at scale; use `keyset_page` there instead.
-    """
-    w = Window.orderBy(*[F.col(c) for c in order_by])
-    return df.withColumn(id_col, F.row_number().over(w))
 
 
 def encode_cursor(*parts) -> str:

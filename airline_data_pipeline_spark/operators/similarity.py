@@ -806,14 +806,15 @@ def append_to_ivf_index(
     re-stamped incrementally (old count + rows written, counted by an
     Observation on the write itself) — no post-append rescan, so the
     whole operation is O(batch) no matter how many files the index
-    holds (measured flat at 1×/3×/10× index scale,
-    `scripts/measure_append_scaling.py`). With probe-all-cells the
+    holds (measured flat at 1×/3×/10× index scale, BASELINE.md
+    "Scaling measurement — round-11 append lifecycle"). With
+    probe-all-cells the
     appended index is score-identical to a from-scratch rebuild on the
     union corpus (oracle-checked: `knn_via_appended_ivf_index`); at
     fixed nprobe the difference is recall drift as the corpus outgrows
     the frozen centroids — measured ≤ 0.02 recall@10 at 2× growth
-    (`scripts/measure_append_recall_drift.py`) — the rebuild dial,
-    same as any production IVF.
+    (BASELINE.md, the round-11 append lifecycle's "Recall drift"
+    paragraph) — the rebuild dial, same as any production IVF.
 
     Two loud guards (review r11): a NULL or wrong-width vector raises
     inside the assignment UDF (checking exactly the rows being
@@ -862,7 +863,7 @@ def compact_ivf_cells(spark, index_dir: str, files_per_cell: int = 1) -> None:
     `append_to_ivf_index` lands a fresh set of files inside the touched
     `cell=` directories, so a long-lived index accumulates small files
     and probe scans degrade into file-listing/footer storms (the same
-    pathology `io.writers.compact_parquet` exists for, but cell-aware:
+    pathology any small-file compaction exists for, but cell-aware:
     a plain compaction would destroy the partition layout pruning
     depends on). This rewrites the cells table back to ~``files_per_cell``
     files per cell — same (cell, salt) writer-spread as the initial
@@ -1053,9 +1054,9 @@ def refit_ivf_index(
     Why it exists: `append_to_ivf_index` assigns new batches to the
     FROZEN centroids — O(batch) and probe-consistent, but as the
     corpus outgrows the fitted model, fixed-nprobe recall drifts.
-    Measured on this synthetic corpus
-    (`scripts/measure_append_recall_drift.py`, BASELINE.md "Recall
-    drift"): ≤ 0.02 recall@10 penalty at 2× growth — so the documented
+    Measured on this synthetic corpus (BASELINE.md "Scaling
+    measurement — round-11 append lifecycle", its "Recall drift"
+    paragraph): ≤ 0.02 recall@10 penalty at 2× growth — so the documented
     cadence is DON'T refit before the corpus has at least doubled past
     the last fit; refit when drift on a held-out probe set exceeds
     what your recall SLO tolerates (the drift is distribution-shift

@@ -471,41 +471,19 @@ def _misra_gries_partition(rows, col: str, k: int):
 
 def _mg_summaries(df: DataFrame, col: str, k: int) -> DataFrame:
     """Lazy per-partition MG summaries (value, mg_count, pid,
-    part_rows) over the non-null string cast of ``col``."""
+    part_rows) over the non-null string cast of ``col``.
+
+    The summary, at most k counters per partition, is the unit of
+    exchange instead of O(distinct values). The pass is an
+    Arrow-batched `mapInPandas` because Misra-Gries is inherently
+    sequential per partition (SURVEY §2.9 tier: custom sequential
+    sketch state)."""
     src = df.select(F.col(col).cast("string").alias("value")).filter(
         F.col("value").isNotNull()
     )
     schema = "value string, mg_count long, pid int, part_rows long"
     return src.mapInPandas(
         lambda rows: _misra_gries_partition(rows, "value", k), schema
-    )
-
-
-def heavy_hitter_candidates(df: DataFrame, col: str, k: int = 50) -> DataFrame:
-    """(value, mg_lower) — Misra-Gries candidate heavy hitters with
-    capacity ``k`` per partition, merged across partitions.
-
-    The scale story: a full `GROUP BY value` shuffles O(distinct
-    values); this shuffles at most k counters PER PARTITION (the
-    summary is the unit of exchange, like every sketch in this module)
-    and the merged candidate set has at most ~k·partitions rows before
-    the final trim — bounded state regardless of cardinality. The
-    per-partition pass is an Arrow-batched `mapInPandas` because
-    Misra-Gries is inherently sequential per partition — this is the
-    documented justification for leaving expression land (SURVEY §2.9
-    tier: custom sequential sketch state).
-
-    Guarantee (Misra-Gries 1982): every value with true count
-    > n/(k+1) appears among the candidates. Candidate COUNTS are lower
-    bounds and partition-order-dependent — callers needing exact,
-    deterministic output must verify candidates against true counts
-    (`heavy_hitters` below does exactly that).
-    """
-    return (
-        _mg_summaries(df, col, k)
-        .filter(F.col("value").isNotNull())
-        .groupBy("value")
-        .agg(F.sum("mg_count").alias("mg_lower"))
     )
 
 

@@ -1,18 +1,14 @@
 """Skew mitigation helpers (SURVEY.md §4 / scale hardening).
 
 AQE's skew-join splitting handles most cases at runtime
-(`spark.sql.adaptive.skewJoin.enabled`, on in session.py). These
-helpers cover the two places AQE can't:
+(`spark.sql.adaptive.skewJoin.enabled`, on in session.py). This
+helper covers the place AQE can't:
 
 - **skewed aggregation** (`salted_agg`): a groupBy where one key holds
   a large share of rows bottlenecks its single reducer. Two-level
   aggregation over a salted key spreads the hot key across
   `num_salts` reducers, then combines partials. Works for any
   algebraic aggregate (sum/count/min/max — pass the combine form).
-- **skewed broadcast-unfriendly join** (`salted_join`): replicate the
-  small side `num_salts`× and salt the big side's key, turning one hot
-  reducer into `num_salts` cooperating ones. Only needed when the
-  small side is too big to broadcast AND the key histogram is spiky.
 """
 
 from __future__ import annotations
@@ -51,27 +47,3 @@ def salted_agg(
     return partial.groupBy(*group_cols).agg(
         *[combine.alias(name) for name, (_, combine) in aggs.items()]
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    num_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the big side, replicate the small
-    side across all salt values, join on (key, salt).
-
-    Row multiplication is num_salts× of the SMALL side only. Prefer
-    `F.broadcast(small)` when it fits; prefer AQE skew-join when the
-    skew is moderate; this is the manual big-hammer for pathological
-    keys.
-    """
-    big_salted = big.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(num_salts)).cast("int")
-    )
-    small_replicated = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(num_salts)]))
-    )
-    return big_salted.join(small_replicated, on=[on, "__salt"], how=how).drop("__salt")

@@ -5011,7 +5011,8 @@ def q_knn_via_compacted_ivf_index(spark, sf_dir):
     "is score-invisible at probe-all while recovering fixed-nprobe "
     "recall lost to distribution drift (the measured rebuild dial: "
     "<=0.02 recall@10 drift at 2x same-distribution growth per "
-    "scripts/measure_append_recall_drift.py, immediate drift on "
+    "BASELINE.md's round-11 append-lifecycle recall-drift "
+    "measurement, immediate drift on "
     "shifted appends per tests/test_similarity.py::"
     "test_refit_recovers_recall_on_shifted_corpus). This is the "
     "reference's declared-but-unbuilt 'keep data fresh' maintenance "

@@ -405,70 +405,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """`running_user_totals` on Spark 4's successor stateful API,
-    `transformWithStateInPandas` (StatefulProcessor + ValueState).
-
-    Same semantics as the `applyInPandasWithState` version above: one
-    (user_id, running count, running value sum) row per key per
-    micro-batch, state partitioned by the grouping key. The successor
-    API adds an explicit processor lifecycle (init/close), typed state
-    handles (ValueState here; ListState/MapState/timers available), and
-    schema evolution of state — the shape future custom operators
-    should take.
-
-    IMPORT-safe everywhere, RUNTIME-blocked in this container: the
-    API's Python state server speaks protobuf to the JVM and imports
-    `google.protobuf` when a query starts, which is absent here and
-    installs are forbidden (SURVEY §2.8). The paired test is gated on
-    `pytest.importorskip("google.protobuf")`, so the port activates the
-    day the environment unblocks.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, total = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def run_available_now(
     stream_df: DataFrame,
     query_name: str,
@@ -502,7 +438,7 @@ def start_parquet_sink(
     ``available_now=True`` drains what's currently available and blocks
     until done (backfill / batch-equivalent replay); the default starts
     a continuous query and returns its handle. For JDBC/warehouse
-    sinks use `run_jdbc_sink` (foreachBatch)."""
+    sinks, call `io.writers.write_jdbc` from a ``foreachBatch``."""
     writer = (
         stream_df.writeStream.outputMode(output_mode)
         .format("parquet")
@@ -519,169 +455,6 @@ def start_parquet_sink(
             q.awaitTermination()
         return q
     return writer.start()
-
-
-def _batch_telemetry_wrap(
-    batch_df: DataFrame, batch_id: int, observe: dict | None
-):
-    """Attach zero-extra-job Observation counters to a foreachBatch
-    micro-batch (the streaming twin of the batch pipeline's `observed()`
-    telemetry, `pipeline/runner.py`): the metrics accumulate DURING the
-    batch's own write pass — no second scan of the batch. Returns
-    (wrapped_df, finalize) where finalize() — called AFTER the write —
-    yields the metrics row dict."""
-    from airline_data_pipeline_spark.operators.validation import observed
-
-    observe = observe or {}
-    wrapped, obs = observed(
-        batch_df,
-        f"batch_{batch_id}",
-        not_null=observe.get("not_null"),
-        value_range=observe.get("value_range"),
-        extra=observe.get("extra"),
-    )
-
-    def finalize() -> dict:
-        return {"batch_id": batch_id, **obs.get}
-
-    return wrapped, finalize
-
-
-def run_jdbc_sink(
-    stream_df: DataFrame,
-    url: str,
-    dbtable: str,
-    checkpoint_dir: str,
-    properties: dict[str, str] | None = None,
-    output_mode: str = "append",
-    available_now: bool = True,
-    observe: dict | None = None,
-    metrics_out: list | None = None,
-):
-    """Warehouse sink via ``foreachBatch`` + the batch JDBC writer —
-    the streaming replacement for the reference's daily row-tuple bulk
-    insert (`dags/flight_data_pipeline.py:100-122`).
-
-    Each micro-batch lands through `write_jdbc`'s parallel
-    per-partition batched inserts. Delivery is at-least-once (the
-    checkpoint records the batch id; a retried batch re-appends) —
-    make the table idempotent (PK upsert or batch_id column) for
-    exactly-once semantics, which is the standard foreachBatch
-    contract.
-
-    ``metrics_out`` (a driver-side list) enables per-batch telemetry:
-    each landed batch appends ``{"batch_id": ..., "n_rows": ...,
-    "null_<col>": ..., "oob_<col>": ...}`` per the ``observe`` spec
-    (keys ``not_null`` / ``value_range`` / ``extra``, as in
-    `operators.validation.observed`). Counters ride the batch's own
-    write job via the Observation API — zero extra jobs, mirroring the
-    batch pipeline's warehouse-write telemetry.
-    """
-    from airline_data_pipeline_spark.io.writers import write_jdbc
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        finalize = None
-        if metrics_out is not None:
-            batch_df, finalize = _batch_telemetry_wrap(batch_df, batch_id, observe)
-        write_jdbc(batch_df, url, dbtable, mode="append", properties=properties)
-        if finalize is not None:
-            metrics_out.append(finalize())
-
-    writer = (
-        stream_df.writeStream.outputMode(output_mode)
-        .foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def run_upsert_sink(
-    stream_df: DataFrame,
-    state_dir: str,
-    key_cols: list[str],
-    version_col: str,
-    checkpoint_dir: str,
-    tiebreakers: list[str] | None = None,
-    available_now: bool = True,
-    observe: dict | None = None,
-    metrics_out: list | None = None,
-):
-    """Streaming CDC → latest-state table: each micro-batch is merged
-    into a parquet snapshot via ``upsert_latest`` (one shuffle on the
-    merge key per batch) inside ``foreachBatch`` — the classic
-    changelog-to-dimension maintenance loop, kept exactly-once by the
-    checkpoint (a replayed batch re-merges idempotently: latest-wins is
-    insensitive to re-application).
-
-    The snapshot swap here is local-filesystem rename, made
-    crash-recoverable for the single-writer case: the live dir is
-    renamed aside to ``.old`` (one atomic rename) before ``.tmp`` is
-    renamed into place, so at every instant at least one COMPLETE
-    snapshot exists under a known name. If a crash lands between the
-    two renames, the next batch finds only ``.old`` and restores it —
-    latest-wins merging makes the replayed batch idempotent on top. On
-    cloud storage swap this for a transactional table format commit
-    (Delta/Iceberg) and keep the identical merge expression.
-
-    ``metrics_out`` / ``observe`` add per-batch Observation telemetry
-    exactly as in `run_jdbc_sink`: the counters are measured over the
-    INCOMING batch (not the merged snapshot) during the snapshot
-    write's own pass — zero extra jobs.
-    """
-    import os
-    import shutil
-
-    from airline_data_pipeline_spark.operators.merge import upsert_latest
-
-    old_dir = state_dir + ".old"
-    tmp_dir = state_dir + ".tmp"
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        finalize = None
-        if metrics_out is not None:
-            batch_df, finalize = _batch_telemetry_wrap(batch_df, batch_id, observe)
-        # Crash recovery: live dir missing but `.old` present means a
-        # previous run died between the two swap renames — `.old` IS
-        # the last complete snapshot; restore it rather than silently
-        # rebuilding state from empty.
-        if not os.path.exists(state_dir) and os.path.exists(old_dir):
-            os.rename(old_dir, state_dir)
-        if os.path.exists(state_dir):
-            base = spark.read.parquet(state_dir)
-        else:
-            base = batch_df.limit(0)
-        merged = upsert_latest(
-            base, batch_df, key_cols, version_col, tiebreakers=tiebreakers
-        )
-        merged.write.mode("overwrite").parquet(tmp_dir)
-        if finalize is not None:
-            metrics_out.append(finalize())
-        # Recoverable swap: never rmtree the only complete snapshot.
-        if os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
-        if os.path.exists(state_dir):
-            os.rename(state_dir, old_dir)
-        os.rename(tmp_dir, state_dir)
-        if os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
 
 
 DOCS_STREAM_SCHEMA = (

@@ -1,177 +1,12 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Machine-speed canary for benchmark reports.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-
-Headline set: the flagship A6 shape, the TPC-H Q1 shape, the star join,
-windows, as-of, dedup, and similarity — the queries whose plans matter
-at 100 TB. Methodology: steady-state (JMH-style) — each query executes
-once untimed to absorb whole-stage-codegen JIT compilation (a fixed
-per-plan cost, irrelevant at scale), then the best of THREE timed
-steady-state runs (collect() to completion). Best-of-3 since r10 (was
-best-of-2): ambient load on this shared box only ever inflates a
-reading — a r10 in-bench run printed three sub-second queries 1.4-1.5×
-their isolated best-of-3 re-reads while the machine canary was
-FASTER than the prior round — so the minimum over one more rep is the
-estimator that stays comparable round-over-round (same rationale as
-the bench_scale.time_query change). Cold totals are reported under
-"cold_sec".
+`perfbench/run.py` records `cpu_canary_sec` next to a traced run so a
+reader can separate host drift from plan regressions.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from airline_data_pipeline_spark.queries.suite import registry  # noqa: E402
-from airline_data_pipeline_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "perf_metrics",
-    "pricing_summary",
-    "revenue_by_nation",
-    "shipping_priority",
-    "route_metrics",
-    "topk_per_group",
-    "sessionize",
-    "asof_purchase_view",
-    "range_join_views_after_purchase",
-    "tumbling_window_counts",
-    "dedup_exact_docs",
-    "minhash_dedup_count",
-    "knn_brute_force",
-    "knn_lsh",
-    "knn_ivf",
-    "returned_item_customers",
-    "grouped_zscore_pandas",
-    "media_feature_extraction",
-    "salted_agg_order_totals",
-]
-
-# Timed with the same steady-state methodology but reported separately
-# (extra_queries) and NEVER added to the headline value — the headline
-# set stays fixed so round-over-round totals compare like-for-like.
-EXTRA = [
-    "product_profit_by_nation_year",
-    "doc_repetition_by_source",
-    "chunk_stats_by_source",
-    "rp_norm_preservation",
-    "embedding_dedup_clusters",
-    "streaming_interval_join_views",
-    # round-8 additions (headline stays like-for-like)
-    "temperature_source_mix",
-    "ngram_overlap_contamination",
-    "quality_classifier_scores",
-    "duplicate_span_stats",
-    "lm_fluency_by_source",
-    "incremental_minhash_dedup",
-    "dsir_selection_by_source",
-    "canonical_doc_selection",
-    "gopher_rules_stats",
-    "perplexity_bucket_mix",
-    "blocklist_filter_stats",
-    "bpe_pair_counts",
-    "source_overlap_matrix",
-    "bpe_merge_steps",
-    "knn_label_vote",
-    # round-8 close: the composed corpus-prep lineage, after the min_by
-    # dedup rewrite and the fan_out pushdown barrier (BASELINE.md)
-    "corpus_prep_end_to_end",
-    # round-9: the 13-rule Gopher repetition audit (9 n-gram widths
-    # from one windowed token pass — the heaviest text scan by design)
-    "gopher_repetition_stats",
-    # round-10: first recorded sf0.1 wall-times for the remaining dedup
-    # shapes — span REMOVAL is the one dedup op whose cost is
-    # O(duplicated tokens) (the anti-join rebuild), and the winnowing
-    # fingerprint index had driver-green correctness but no bench row
-    "span_removal_stats",
-    "winnow_fingerprint_pairs",
-    # round-10: the r9-new corpus/ANN shapes get recorded sf0.1 numbers
-    # too — the epoch plan is two dimension-sized aggs + a row-local
-    # explode, and the stored-IVF row times the FULL production round
-    # trip (index fit + partitioned write + probe) per rep
-    "epoch_replication_mix",
-    "knn_via_ivf_index",
-    # round-11 (VERDICT r10 #5): the IO/streaming family gets recorded
-    # sf0.1 rows — the streaming gate times a full replay + per-batch
-    # index gate, the binary row the 2PC blob sink round-trip, and the
-    # three relational rows the SCD2/upsert/footer-merge shapes
-    "streaming_ingest_gate",
-    "binary_media_landing_stats",
-    "scd2_user_value_history",
-    "upsert_latest_wins",
-    "schema_evolution_merged_read",
-    # round-11: the new vote-audit ANN swap and the two index-append
-    # lifecycle rows (each times its full build+append+probe/gate trip)
-    "knn_label_vote_lsh",
-    "knn_via_appended_ivf_index",
-    "incremental_dedup_via_merged_index",
-    # round-11: full lifecycle per rep — build(2 files/cell) + append +
-    # compact + probe; the streaming row replays a 4-trigger vector
-    # stream against the stored index per rep
-    "knn_via_compacted_ivf_index",
-    "streaming_ann_annotate",
-    # round-12: the lifecycle endgame — refit (build + append + one
-    # O(index) re-assign pass), retraction (minhash index build +
-    # anti-join rewrite + gate), PQ (build + codebook fit + O(index)
-    # encode + ADC probe with exact re-rank), the PQ serving swap
-    # (4-trigger stream replay in use_pq mode), and the checkpoint
-    # state migration (two stream replays + the state rebuild between)
-    "knn_via_refitted_ivf_index",
-    "dedup_gate_after_retraction",
-    "knn_via_pq_ivf_index",
-    "streaming_ann_annotate_pq",
-    "streaming_state_migration",
-    # round-12: low-recall build + reband to registry params + gate
-    "dedup_gate_after_reband",
-    # round-13: the deletion verb (build + PQ encode + anti-join
-    # rewrite of both tables + probe-all) and the two fsck rows (build
-    # + compound crash-state injection + one repair pass + gate/probe)
-    "knn_via_retracted_ivf_index",
-    "dedup_gate_after_fsck",
-    "knn_via_fsck_recovered_ivf_index",
-    # round-13: the self-growing ingest-admit loops (index build + 4
-    # ordered single-file triggers, each gating vs index + admitted),
-    # text and embedding, plus the stored-SRP semantic gate round-trip
-    "streaming_ingest_admit_loop",
-    "embedding_gate_via_index",
-    "streaming_vector_admit_loop",
-    "embedding_gate_after_retraction",
-    # round-14: SRP compaction (build + 2 appends + compact + gate per
-    # rep) and the two cold-ledger skew-guard gates (build/append +
-    # ledger refresh + skip_hot gate per rep)
-    "embedding_gate_via_compacted_index",
-    "embedding_gate_skip_hot_cold_ledger",
-    "incremental_dedup_skip_hot_cold_ledger",
-    # round-14: the admit loops' fold maintenance verb (build + land
-    # delta dirs + fold-append + retire + gate per rep, text and
-    # embedding)
-    "incremental_dedup_via_folded_index",
-    "embedding_gate_via_folded_index",
-    # round-14: local IVF rebalance (coarse build + hot-cell split +
-    # probe-all per rep)
-    "knn_via_split_ivf_index",
-    # round-14: the maintenance orchestrator rows (build + grow +
-    # one maintain pass [fsck/compact/split/re-encode/ledger] + gate
-    # or PQ probe per rep — the heaviest verb compositions by design)
-    "incremental_dedup_via_maintained_index",
-    "knn_via_maintained_ivf_index",
-    # round-15: the production cadence as ONE composition — fragmented
-    # build + a REAL 2-trigger admit-loop stream replay + fold +
-    # maintain [fsck/compact/ledger] + skip_hot gate per rep (VERDICT
-    # r14 #6); expect the admit-loop trigger floor plus the fold/
-    # maintain IO passes on top of the gate shape
-    "streaming_admit_fold_maintain_gate",
-    # round-15 (late): the embedding twin of the cadence row — same
-    # composition, SRP artifact side (2-trigger vector admit replay +
-    # fold(kind=srp) + maintain(kind=srp) + skip_hot gate per rep)
-    "streaming_vector_admit_fold_maintain_gate",
-]
 
 
 def cpu_canary_sec(spark) -> float:
@@ -192,148 +27,3 @@ def cpu_canary_sec(spark) -> float:
 
     one()
     return round(min(one() for _ in range(3)), 3)
-
-
-def io_canary_sec(spark) -> float:
-    """Filesystem-speed reference (VERDICT r12 #5): the r12 driver
-    bench showed 1.3-2.3x swings concentrated in IO-heavy lifecycle
-    rows (dozens of small parquet writes + FS renames per rep) while
-    the pure-CPU canary sat quiet — a codegen loop cannot see
-    filesystem/page-cache pressure. This times the exact profile those
-    rows stress: one 32-file parquet write, a directory rename (the
-    swap primitive's cost), and a read-back count — fixed row count,
-    plan-invariant, same best-of-3-after-warm-up protocol as the CPU
-    canary. If a lifecycle row drifts while io_canary/row stays flat,
-    the plan moved; if both drift together, the filesystem did."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    def one() -> float:
-        root = tempfile.mkdtemp(prefix="spark_graft_iocanary_")
-        try:
-            t0 = time.time()
-            spark.range(0, 200_000, 1, 32).select(
-                "id", F.xxhash64(F.col("id").cast("string")).alias("h")
-            ).write.mode("overwrite").parquet(root + "/t1")
-            os.rename(root + "/t1", root + "/t2")
-            spark.read.parquet(root + "/t2").count()
-            return time.time() - t0
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-
-    one()
-    return round(min(one() for _ in range(3)), 3)
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # fail fast and loud if the driver re-encoded testdata timestamps
-    # outside the reader-normalizer contract (the round-3 NTZ incident)
-    from airline_data_pipeline_spark.io.selfcheck import check_testdata_encodings
-
-    check_testdata_encodings(sf_dir)
-    spark = get_spark("bench")
-    reg = registry()
-
-    times: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in HEADLINE:
-        # one broken query must never zero the whole bench (round 3: a
-        # single AnalysisException in warm-up left the round with no
-        # performance numbers at all) — record the error, keep timing
-        # the other queries, and always exit 0 with a parseable line.
-        try:
-            t0 = time.time()
-            reg[name].fn(spark, sf_dir).collect()  # warm-up: JIT + codegen
-            cold[name] = round(time.time() - t0, 3)
-            # measured: best of three steady-state runs — a single run
-            # is at the mercy of one GC pause / cache-eviction hiccup
-            # in the shared JVM, and best-of-2 still let ambient load
-            # inflate sub-second queries 1.4-1.5x (module docstring)
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                reg[name].fn(spark, sf_dir).collect()
-                best = min(best, time.time() - t0)
-            times[name] = round(best, 3)
-        except Exception as exc:  # noqa: BLE001 — resilience is the point
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    # extra-set failures must not null the headline value — they are
-    # informational timings, not part of the gate; record separately.
-    extra: dict[str, float] = {}
-    extra_cold: dict[str, float] = {}
-    extra_errors: dict[str, str] = {}
-    for name in EXTRA:
-        try:
-            # the warm-up is TIMED and reported (extra_cold): VERDICT
-            # r13 #1 — when a steady-state extra reading looks
-            # anomalous (knn_label_vote 20.9 s on a quiet-canary run),
-            # the first question is whether the warm-up itself ran
-            # long (ambient-load burst / first-plan cost) — make the
-            # artifact answer it instead of a judge re-measure.
-            t0 = time.time()
-            reg[name].fn(spark, sf_dir).collect()  # warm-up
-            extra_cold[name] = round(time.time() - t0, 3)
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                reg[name].fn(spark, sf_dir).collect()
-                best = min(best, time.time() - t0)
-            extra[name] = round(best, 3)
-        except Exception as exc:  # noqa: BLE001
-            extra_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    total = round(sum(times.values()), 3)
-    # KEY ORDER IS LOAD-BEARING (VERDICT r13 #3, refined r14 #2): the
-    # driver's capture occasionally truncates this line from the HEAD,
-    # so keys go in ascending order of comparison value — warm-up
-    # times (extra_cold) FIRST, because when truncation bites it must
-    # eat the least round-over-round-comparable dict: a surviving
-    # extra_cold sitting where last round's warm extras sat reads as a
-    # phantom regression (r14's "knn_label_vote_lsh 5.9→12.7" was
-    # exactly that). Then the warm extras, then the headline
-    # total/queries LAST — the keys every comparison needs most.
-    out = {
-        "metric": "headline_queries_total",
-        "unit": "sec",
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "extra_cold": extra_cold,
-        "extra_queries": extra,
-    }
-    if extra_errors:
-        out["extra_errors"] = extra_errors
-    if errors:
-        out["errors"] = errors
-        out["partial_sec"] = total
-    out["n_queries_timed"] = len(times)
-    out["n_queries_total"] = len(HEADLINE)
-    # driver-contract self-evidence (VERDICT r15 #2): the bench honors
-    # $SPARK_GRAFT_CPUS (session.py reads it into local[N] and the
-    # shuffle-partition default), but the JSON never SAID so, and the
-    # driver's scaling check flagged `suspect_cpus_ignored` against a
-    # compliant run. Print the effective parallelism + master + the
-    # data dir actually used; placed late in the line so a head-
-    # truncated capture (VERDICT r13 #3) still carries them.
-    out["cpus"] = spark.sparkContext.defaultParallelism
-    out["master"] = spark.sparkContext.master
-    out["sf_dir"] = sf_dir
-    out["canary_sec"] = cpu_canary_sec(spark)
-    out["io_canary_sec"] = io_canary_sec(spark)
-    out["cold_sec"] = round(sum(cold.values()), 3) if not errors else None
-    out["queries"] = times
-    # a round with a broken query must not report a lower, better-
-    # looking total: with errors present, value is null and the
-    # partial sum moves to partial_sec; n_queries_timed makes every
-    # round-over-round comparison explicitly like-for-like.
-    out["value"] = total if not errors else None
-    print(json.dumps(out))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

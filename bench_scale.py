@@ -1,9 +1,9 @@
-"""Scaling benchmark for the dedup/ANN family: measure how the
-corpus-sized operators behave ONE ORDER OF MAGNITUDE above the driver's
-largest test data, turning the 100 TB plan-shape argument into a
-measured scaling exponent.
+"""Scale-gate harness for the dedup/ANN and relational families:
+synthesize corpora above the largest test data (sf0.1) and time
+operators on them, so `tests/test_scale_gate.py` can fit a scaling
+exponent per operator.
 
-Synthesizes sf0.3/sf1-sized `documents` and `embeddings` tables by
+`synthesize` writes `factor`× `documents` and `embeddings` tables by
 replicating sf0.1 with per-replica scrambling chosen to preserve each
 operator's workload characteristics (so the measurement is a fair
 scale-up, not a degenerate one):
@@ -20,199 +20,23 @@ scale-up, not a degenerate one):
   scramble to ~0 — 10 independent-looking copies of the same cluster
   structure, the realistic shape of a 10× corpus.
 
-A second family (RELATIONAL_FAMILY) scale-fits the join/agg/window
-headline queries over factor× lineitem/orders/events with FIXED
-dimension tables (`synthesize_relational` docstring) — the other half
-of the engine, measured instead of plan-argued.
-
-Usage: python bench_scale.py [--scales 1,3,10] [--families corpus,relational]
-Prints ONE JSON line:
-  {"metric": "dedup_ann_scaling", "scales": {...},
-   "exponents_top_interval": {...}, "relational_scales": {...},
-   "relational_exponents_top_interval": {...}}
-
-The per-query scaling exponent is fit as log(t_hi/t_lo)/log(n_hi/n_lo)
-over the two largest scales; ~1.0 = linear (what the plans promise),
->1.3 = super-linear blowup worth investigating (hot-bucket caps,
-CC iteration growth).
+`synthesize_relational` scales lineitem/orders/events over FIXED
+dimension tables (its docstring) for the join/agg/window operators.
+`EXTRA_FAMILY` holds the gated operators that are not registry queries
+(production-dial variants), and `time_query` is the shared
+per-point measurement protocol.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
-
-from airline_data_pipeline_spark.queries.suite import registry  # noqa: E402
-from airline_data_pipeline_spark.session import get_spark  # noqa: E402
-
-BASE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Registry queries timed as-is: their index parameters are
-# corpus-size-independent (minhash bands/rows; knn bucket/cell counts
-# with a FIXED query set; row-local repetition scoring), so their cost
-# should scale ~linearly with corpus size.
-FAMILY = [
-    "minhash_dedup_count",
-    "knn_lsh",
-    "knn_ivf",
-    "doc_repetition_by_source",
-    "tfidf_top_terms",
-    "ngram_jaccard_pairs",
-    "simhash_near_dups",
-    "corpus_prep_end_to_end",
-    "contamination_check_splits",
-    "heavy_hitter_tokens",
-    # round-8 additions: the new corpus ops (temperature mixing is two
-    # cheap scans; the overlap check joins eval shingles against a
-    # train set that GROWS with the corpus; the classifier is explode +
-    # broadcast-model join + per-doc agg)
-    "temperature_source_mix",
-    "ngram_overlap_contamination",
-    "quality_classifier_scores",
-    # ExactSubstr duplicate-span detection: same quadratic-risk class
-    # as the bucketed dedups (a boilerplate span repeated corpus-wide
-    # is a hot hash key in the occurrences⋈canonical join)
-    "duplicate_span_stats",
-    # bigram LM gate: the vocabulary (train groupBy + history window)
-    # grows with the corpus — the family's only op whose MODEL scales
-    # with the data
-    "lm_fluency_by_source",
-    # cross-corpus incremental gate: BOTH sides (frozen reference and
-    # incoming batch) grow with the corpus here — the worst case for
-    # the cross-set bucket join, same hot-bucket quadratic risk class
-    # as minhash_dedup_count
-    "incremental_minhash_dedup",
-    # DSIR: two count aggregates + a FIXED 4096-bucket broadcast model
-    # + one explode/join/sum scoring scan — expected ~linear
-    "dsir_selection_by_source",
-    # round-8 close additions: survivor selection rides the same pair
-    # graph as minhash (window over cluster-sized groups on top);
-    # Gopher rules are a single row-local scan + source agg (expected
-    # flat-to-linear); CCNet tiling adds the per-lang NTILE window to
-    # the LM-gate shape (vocabulary grows with the corpus)
-    "canonical_doc_selection",
-    "gopher_rules_stats",
-    "perplexity_bucket_mix",
-    # blocklist word-filter: same flat row-local-scan + source-agg
-    # shape as the Gopher audit
-    "blocklist_filter_stats",
-    # BPE pair counts: expansion input is the vocab, which the
-    # scrambled corpus synthesis barely grows — expect near-flat
-    "bpe_pair_counts",
-    # source-pair overlap: corpus-sized hashed-shingle distinct, then
-    # source-set-bounded work — expect sub-linear like the dedup family
-    "source_overlap_matrix",
-    # iterative BPE: one corpus-sized word count, then vocab-bounded
-    # per-merge work — expect near-flat (vocab grows only via the
-    # scrambling suffixes)
-    "bpe_merge_steps",
-    # kNN label-vote audit: corpus x FIXED-eval-slice brute scoring —
-    # linear by design (a fraction-sized sample would be quadratic)
-    "knn_label_vote",
-    # round-9: 13-rule Gopher repetition audit — one token window pass
-    # building all 9 n-gram widths, partitioning-aligned aggs; expect
-    # ~linear (unit count is 9x tokens, per-doc state bounded)
-    "gopher_repetition_stats",
-    # round-10: the last two dedup shapes without campaign history.
-    # Winnowing: fingerprint inverted index — same bucket-join class as
-    # minhash (hot fingerprint = hot key). Span REMOVAL: cost is
-    # O(duplicated tokens) via the occurrences anti-join rebuild — the
-    # only dedup op whose work scales with the duplicate mass itself.
-    "winnow_fingerprint_pairs",
-    "span_removal_stats",
-    # round-11: the vote audit's EXERCISED ANN swap — same vote stages,
-    # SRP candidate scorer at guaranteed-recall registry settings; at
-    # fixed bits the candidate fraction is ~constant so expect the
-    # brute form's linear shape minus the broadcast-scorer constant
-    # (the production dial is bits tracking corpus growth, like
-    # knn_lsh's scaled-bits twin)
-    "knn_label_vote_lsh",
-    # round-11 lifecycle rows: each times a FULL index round trip per
-    # rep (build + append [+ compact] + probe/gate) — the build
-    # dominates and is linear in the corpus; the append itself is
-    # measured flat separately (scripts/measure_append_scaling.py)
-    "knn_via_appended_ivf_index",
-    "incremental_dedup_via_merged_index",
-    # round-12 lifecycle rows, same build-dominated class as the r11
-    # pair above (a FULL artifact round trip per rep): PQ adds the
-    # codebook fit (model-sized) + one O(index) encode pass + the
-    # ADC-candidates/exact-rerank probe — candidates are batch ×
-    # corpus at probe-all, so expect the knn_label_vote linear shape;
-    # the refit row pays build + append + an O(index) re-assign pass;
-    # the retraction row pays minhash index build + an O(index)
-    # anti-join rewrite + the gate
-    "knn_via_pq_ivf_index",
-    "knn_via_refitted_ivf_index",
-    "dedup_gate_after_retraction",
-    # round-13 (VERDICT r12 #3): the three rows that shipped after the
-    # r12 targeted campaign, plus this round's new lifecycle rows.
-    # Reband: low-recall build + ONE shingle-local O(index) signature
-    # recompute + gate — the failure class to watch is the recompute
-    # going shingle-shuffle-bound or the new-generation write
-    # amplifying; expect the build-dominated linear shape.
-    "dedup_gate_after_reband",
-    # PQ serving: index build + codebook fit + O(index) encode + a
-    # 4-trigger stream replay whose per-trigger work is batch-sized —
-    # expect linear build+encode over a fixed trigger-floor constant
-    "streaming_ann_annotate_pq",
-    # retraction (ANN side): build + PQ encode + anti-join rewrite of
-    # cells AND pqcodes + probe-all — two O(index) IO passes on top of
-    # the build-dominated class
-    "knn_via_retracted_ivf_index",
-    # fsck rows: build + crash-state injection + one fsck pass (repair
-    # is rename-dominated; the orphan check is an id-projected
-    # anti-join) + gate/probe — expect the underlying gate/probe shape
-    "dedup_gate_after_fsck",
-    "knn_via_fsck_recovered_ivf_index",
-    # round-13 admit loops + SRP artifact rows. The admit loops' delta
-    # side re-hashes everything ADMITTED so far per trigger, so total
-    # work is ~linear in corpus (sum over 4 triggers of O(admitted));
-    # the failure class to watch is the per-trigger delta gate going
-    # pair-quadratic on a hot bucket. SRP gate/retraction rows are the
-    # build-dominated lifecycle class (one banding pass + broadcast
-    # batch joins / one anti-join rewrite).
-    "streaming_ingest_admit_loop",
-    "streaming_vector_admit_loop",
-    "embedding_gate_via_index",
-    "embedding_gate_after_retraction",
-    # round-14 rows. Compaction and fold are O(index)/O(delta) IO
-    # passes on top of the SRP build-dominated class; the cold-ledger
-    # skip_hot gates add one bucket-table groupBy-count (the refresh)
-    # to their plain-gate siblings' shape. NOTE these run the registry
-    # parity dial (fixed n_bits=2) like their siblings: the known
-    # fixed-width quadratic appears at 10x by design — the PRODUCTION
-    # dial is the gated scaled-bits entry; compare like with like.
-    "embedding_gate_via_compacted_index",
-    "embedding_gate_skip_hot_cold_ledger",
-    "incremental_dedup_skip_hot_cold_ledger",
-    "incremental_dedup_via_folded_index",
-    "embedding_gate_via_folded_index",
-    # local IVF rebalance: one O(index) count pass + O(hot cell) split
-    # work (sub-fit, staged rewrite of the hot cell only) + probe-all;
-    # the failure class is the split accidentally rewriting cold cells
-    # (locality lost -> refit-shaped O(index) growth)
-    "knn_via_split_ivf_index",
-    # The r14 maintenance-orchestrator rows are deliberately NOT
-    # campaigned: maintain_stored_index composes verbs that are each
-    # campaigned above (compaction r11/r13, split r14 at 0.66, PQ
-    # encode r12, ledger refresh = one bucket count) and adds only
-    # metadata trigger checks (file counts, fit_gen/ledger compares) —
-    # no new data-shaped stage exists to fit an exponent to; a
-    # campaign would re-measure the sum of its parts. The r15
-    # production-cadence composition row
-    # (streaming_admit_fold_maintain_gate) stays out for the same
-    # reason: admit loop (campaigned r13), fold (r14), maintain
-    # (composed, above), one-shot gate (campaigned r11+) — every
-    # data-shaped stage already has its own fit.
-]
 
 
 def bench_embedding_dedup(spark, sf_dir):
@@ -397,7 +221,6 @@ def _skewed_gate_run(spark, sf_dir, skip_hot: bool):
     similarity.write_srp_index(
         ref_all, root, dims=64, n_bits=n_bits, n_tables=24
     )
-    hot = None
     if skip_hot:
         base = max(16, (n_ref + max(1, n_ref // 5)) >> n_bits)
         similarity.refresh_srp_hot_buckets(spark, root, hot_threshold=4 * base)
@@ -408,10 +231,6 @@ def _skewed_gate_run(spark, sf_dir, skip_hot: bool):
     return _localized(spark, out, scratch_dirs=(root,))
 
 
-def bench_embedding_gate_skew_guard_off(spark, sf_dir):
-    return _skewed_gate_run(spark, sf_dir, skip_hot=False)
-
-
 def bench_embedding_gate_skew_guard_on(spark, sf_dir):
     return _skewed_gate_run(spark, sf_dir, skip_hot=True)
 
@@ -420,32 +239,11 @@ EXTRA_FAMILY = {
     "embedding_dedup_clusters_scaled_bits": bench_embedding_dedup,
     "embedding_gate_via_index_scaled_bits": bench_embedding_gate_index_scaled_bits,
     "vector_admit_loop_scaled_bits": bench_vector_admit_loop_scaled_bits,
-    # r14 skew-guard A/B: same injected-boilerplate corpus, ledger
-    # guard on vs off — the measured case for refresh_srp_hot_buckets
-    "embedding_gate_skew_guard_off": bench_embedding_gate_skew_guard_off,
+    # r14 skew guard: the injected-boilerplate corpus with the ledger
+    # guard on — the measured case for refresh_srp_hot_buckets
     "embedding_gate_skew_guard_on": bench_embedding_gate_skew_guard_on,
 }
 
-
-# Relational (join/agg/window) headline queries, scale-fitted over
-# factor× lineitem/orders/events with FIXED dimension tables — the
-# other half of the engine, whose 100 TB claim was previously a
-# plan-shape argument only. Index-free plans, so the expected fit is
-# ~linear minus the per-query overhead floor.
-RELATIONAL_FAMILY = [
-    "pricing_summary",                 # Q1 scan + 4-group agg
-    "revenue_by_nation",               # fact⋈fact⋈dims multi-join
-    "shipping_priority",               # Q3 join + top-k
-    "sessionize",                      # per-user window gaps
-    "salted_agg_order_totals",         # skew-salted two-phase agg
-    "range_join_views_after_purchase", # per-user interval join
-    # round-13 (VERDICT r12 #3): reads only events, which the
-    # relational synthesizer scales — two stream replays + the
-    # checkpoint state rebuild between them; the dump is state-sized
-    # (watermark horizon), so expect the replay's linear shape over a
-    # fixed trigger-floor constant
-    "streaming_state_migration",
-]
 
 RELATIONAL_DIMS = ["region", "nation", "customer", "supplier", "part"]
 
@@ -597,10 +395,10 @@ def synthesize_relational(spark, base_dir: str, out_dir: str, factor: int) -> No
 
 
 def time_query(spark, fn, sf_dir: str, reps: int = 3) -> float:
-    """THE campaign measurement protocol: one warm-up collect (JIT +
-    codegen), then best of `reps` steady-state runs. tests/test_scale_gate
-    shares this function so the CI gate and the by-hand campaign can
-    never drift into measuring different things.
+    """THE scale-gate measurement protocol: one warm-up collect (JIT +
+    codegen), then best of `reps` steady-state runs — the same protocol
+    the recorded `BENCH_SCALE_r*.json` campaigns used, so gate fits stay
+    comparable with them.
 
     Best-of-3 (r10, was best-of-2): ambient load only ever INFLATES a
     wall-clock reading, so the minimum over reps is the estimator that
@@ -616,135 +414,3 @@ def time_query(spark, fn, sf_dir: str, reps: int = 3) -> float:
         fn(spark, sf_dir).collect()
         best = min(best, time.monotonic() - t0)
     return best
-
-
-def time_family(
-    spark, sf_dir: str, only: set[str] | None = None
-) -> dict[str, float]:
-    reg = registry()
-    fns = {name: reg[name].fn for name in FAMILY} | EXTRA_FAMILY
-    if only is not None:
-        fns = {name: fn for name, fn in fns.items() if name in only}
-    return {name: round(time_query(spark, fn, sf_dir), 3) for name, fn in fns.items()}
-
-
-def _fit_exponents(
-    results: dict[str, dict[str, float]], scales: list[int], names: list[str]
-) -> dict[str, float] | None:
-    """log(t_hi/t_lo)/log(n_hi/n_lo) over the two largest scales; None
-    with a single scale point (a single --scales value used to crash
-    on scales[-2])."""
-    if len(scales) < 2:
-        return None
-    import math
-
-    lo, hi = str(scales[-2]), str(scales[-1])
-    ratio = scales[-1] / scales[-2]
-    return {
-        q: round(
-            math.log(max(results[hi][q], 1e-9) / max(results[lo][q], 1e-9))
-            / math.log(ratio),
-            2,
-        )
-        for q in names
-    }
-
-
-def main() -> None:
-    scales = [
-        int(s)
-        for s in (sys.argv[sys.argv.index("--scales") + 1] if "--scales" in sys.argv else "1,3,10").split(",")
-    ]
-    families = [
-        f.strip()
-        for f in (
-            sys.argv[sys.argv.index("--families") + 1]
-            if "--families" in sys.argv
-            else "corpus,relational"
-        ).split(",")
-        if f.strip()
-    ]
-    unknown = set(families) - {"corpus", "relational"}
-    if unknown:
-        # fail BEFORE the hours-long campaign, not after a silent no-op
-        raise SystemExit(
-            f"unknown --families {sorted(unknown)}; valid: corpus, relational"
-        )
-    # --queries a,b,c: restrict either family to a subset — the
-    # targeted-campaign path for newly added ops (the full 30+-query
-    # campaign stays the per-round default). Unknown names fail fast.
-    only: set[str] | None = None
-    if "--queries" in sys.argv:
-        # guard the value lookup (ADVICE r12): `--queries` as the LAST
-        # argv used to raise IndexError instead of the usage message
-        qi = sys.argv.index("--queries") + 1
-        if qi >= len(sys.argv) or sys.argv[qi].startswith("--"):
-            raise SystemExit(
-                "--queries needs a comma-separated list of query names"
-            )
-        only = {q.strip() for q in sys.argv[qi].split(",") if q.strip()}
-        if not only:
-            raise SystemExit(
-                "--queries needs a comma-separated list of query names"
-            )
-        known = set(FAMILY) | set(EXTRA_FAMILY) | set(RELATIONAL_FAMILY)
-        bad = only - known
-        if bad:
-            raise SystemExit(
-                f"unknown --queries {sorted(bad)}; valid names are the "
-                f"FAMILY/EXTRA_FAMILY/RELATIONAL_FAMILY entries"
-            )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("bench_scale", cpus=int(cpus))
-    results: dict[str, dict[str, float]] = {}
-    rel_results: dict[str, dict[str, float]] = {}
-    scratch: list[str] = []
-    reg = registry()
-    try:
-        for s in scales:
-            # factor=1 is ALSO rewritten through synthesize so every
-            # scale point shares the N_FILES layout (see docstring)
-            if "corpus" in families:
-                sf_dir = tempfile.mkdtemp(prefix=f"spark_graft_scale{s}_")
-                scratch.append(sf_dir)
-                synthesize(spark, BASE_SF_DIR, sf_dir, s)
-                results[str(s)] = time_family(spark, sf_dir, only)
-            if "relational" in families:
-                rel_dir = tempfile.mkdtemp(prefix=f"spark_graft_rel{s}_")
-                scratch.append(rel_dir)
-                synthesize_relational(spark, BASE_SF_DIR, rel_dir, s)
-                rel_results[str(s)] = {
-                    name: round(time_query(spark, reg[name].fn, rel_dir), 3)
-                    for name in RELATIONAL_FAMILY
-                    if only is None or name in only
-                }
-    finally:
-        for d in scratch:
-            shutil.rmtree(d, ignore_errors=True)
-    out: dict = {
-        "metric": "dedup_ann_scaling",
-        "unit": "sec",
-        "base_sf_dir": BASE_SF_DIR,
-    }
-    # an --queries set can filter a family to nothing — drop the empty
-    # per-scale dicts so the artifact never carries a vacuous
-    # scales/exponents block (ADVICE r12)
-    results = {s: r for s, r in results.items() if r}
-    rel_results = {s: r for s, r in rel_results.items() if r}
-    if results:
-        out["scales"] = results
-        out["exponents_top_interval"] = _fit_exponents(
-            results, scales,
-            [n for n in [*FAMILY, *EXTRA_FAMILY] if only is None or n in only],
-        )
-    if rel_results:
-        out["relational_scales"] = rel_results
-        out["relational_exponents_top_interval"] = _fit_exponents(
-            rel_results, scales,
-            [n for n in RELATIONAL_FAMILY if only is None or n in only],
-        )
-    print(json.dumps(out))
-
-
-if __name__ == "__main__":
-    main()

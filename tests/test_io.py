@@ -14,7 +14,7 @@ from airline_data_pipeline_spark.io.landing import (
     validate_landed_file,
 )
 from airline_data_pipeline_spark.io.writers import write_csv_export
-from airline_data_pipeline_spark.operators.skew import salted_agg, salted_join
+from airline_data_pipeline_spark.operators.skew import salted_agg
 from tests.conftest import SF_ORACLE, SF_SMOKE, require_sf
 
 
@@ -165,21 +165,6 @@ def test_salted_agg_matches_plain_agg(spark):
             },
             num_salts=8,
         ).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_matches_plain_join(spark):
-    big = spark.createDataFrame(
-        [(("hot" if i % 5 else f"k{i}"), i) for i in range(500)], "key string, v long"
-    )
-    small = spark.createDataFrame(
-        [("hot", 1), ("k5", 2), ("k10", 3)], "key string, w long"
-    )
-    plain = {(r["key"], r["v"], r["w"]) for r in big.join(small, "key").collect()}
-    salted = {
-        (r["key"], r["v"], r["w"])
-        for r in salted_join(big, small, on="key", num_salts=8).collect()
     }
     assert salted == plain
 
@@ -374,126 +359,6 @@ def test_clustered_write_yields_near_disjoint_file_ranges(spark, tmp_path):
     assert len(touched) <= 3
 
 
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from airline_data_pipeline_spark.io.readers import table
-    from airline_data_pipeline_spark.io.writers import compact_parquet
-
-    ev = table(spark, require_sf(SF_SMOKE), "events").select(
-        "event_id", "user_id", "value"
-    )
-    src = str(tmp_path / "fragmented")
-    ev.repartition(64).write.mode("overwrite").parquet(src)  # 64 sliver files
-    n_src = len([f for f in os.listdir(src) if f.endswith(".parquet")])
-    assert n_src == 64
-
-    dest = str(tmp_path / "compacted")
-    n_out = compact_parquet(spark, src, dest, target_file_bytes=1 << 30)
-    assert n_out == 1  # tiny table fits one target-size file
-    files = [f for f in os.listdir(dest) if f.endswith(".parquet")]
-    assert len(files) == 1
-    # lossless: same rows, just fewer files
-    back = spark.read.parquet(dest)
-    assert sorted(r["event_id"] for r in back.collect()) == sorted(
-        r["event_id"] for r in ev.collect()
-    )
-
-
-def test_zordered_write_boxes_both_columns(spark, tmp_path):
-    """Z-order layout: each output file must cover a compact BOX of the
-    2-D key space — mean box area ≪ the full range product — so footer
-    stats prune range predicates on EITHER column. A 1-D clustered or
-    unclustered write leaves one/both dimensions spanning ~the full
-    range in every file (area fraction ≈ 1)."""
-    import pyarrow.parquet as pq
-
-    from airline_data_pipeline_spark.io.readers import table
-    from airline_data_pipeline_spark.io.writers import write_parquet_zordered
-
-    orders = table(spark, require_sf(SF_SMOKE), "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    path = str(tmp_path / "zordered")
-    write_parquet_zordered(orders, path, ["o_custkey", "o_totalprice"], num_files=16)
-
-    boxes = []
-    for f in os.listdir(path):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        mins, maxs = {}, {}
-        for g in range(md.num_row_groups):
-            for ci in range(md.row_group(g).num_columns):
-                col = md.row_group(g).column(ci)
-                name = col.path_in_schema
-                if name in ("o_custkey", "o_totalprice"):
-                    st = col.statistics
-                    mins[name] = min(mins.get(name, st.min), st.min)
-                    maxs[name] = max(maxs.get(name, st.max), st.max)
-        boxes.append((mins, maxs))
-    assert len(boxes) == 16
-    gx = (min(b[0]["o_custkey"] for b in boxes), max(b[1]["o_custkey"] for b in boxes))
-    gy = (min(b[0]["o_totalprice"] for b in boxes), max(b[1]["o_totalprice"] for b in boxes))
-    fracs = []
-    for mins, maxs in boxes:
-        fx = (maxs["o_custkey"] - mins["o_custkey"]) / max(1, gx[1] - gx[0])
-        fy = (maxs["o_totalprice"] - mins["o_totalprice"]) / max(1e-9, gy[1] - gy[0])
-        fracs.append(fx * fy)
-    mean_area = sum(fracs) / len(fracs)
-    # 16 files on a Z-curve → each box ~1/16 of the area (plus curve
-    # jumps); anything clustered-by-one-column-only would be ~0.5-1.0
-    assert mean_area < 0.35, f"mean box area fraction {mean_area}"
-    # lossless round trip
-    back = spark.read.parquet(path)
-    assert back.count() == orders.count()
-    assert set(back.columns) == set(orders.columns)
-
-
-def test_zordered_write_constant_column_degrades_to_1d(spark, tmp_path):
-    """Regression (VERDICT r5): a constant column makes the quantizer's
-    bucket width 0; the old `(v-lo)/((hi-lo)/2^bits)` went null and
-    `least` silently sent every row to the top bucket. The guard must
-    quantize constants to 0 so the layout degrades to clean 1-D
-    clustering on the varying column — each file still a narrow,
-    near-disjoint range of it."""
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    from airline_data_pipeline_spark.io.readers import table
-    from airline_data_pipeline_spark.io.writers import write_parquet_zordered
-
-    orders = (
-        table(spark, require_sf(SF_SMOKE), "orders")
-        .select("o_orderkey", "o_custkey")
-        .withColumn("region_code", F.lit(7))
-    )
-    path = str(tmp_path / "zconst")
-    write_parquet_zordered(orders, path, ["region_code", "o_custkey"], num_files=8)
-
-    spans = []
-    for f in os.listdir(path):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        lo = hi = None
-        for g in range(md.num_row_groups):
-            for ci in range(md.row_group(g).num_columns):
-                col = md.row_group(g).column(ci)
-                if col.path_in_schema == "o_custkey":
-                    st = col.statistics
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-        spans.append((lo, hi))
-    assert len(spans) == 8
-    glo = min(s[0] for s in spans)
-    ghi = max(s[1] for s in spans)
-    mean_frac = sum((hi - lo) / max(1, ghi - glo) for lo, hi in spans) / len(spans)
-    # 8 files over a 1-D range → each should span ~1/8 of it; the null
-    # quantizer made every file span ~the full range (frac ≈ 1).
-    assert mean_frac < 0.35, f"mean o_custkey span fraction {mean_frac}"
-    assert spark.read.parquet(path).count() == orders.count()
-
-
 def test_testdata_encoding_check_rejects_empty_dir(tmp_path):
     """Regression (ADVICE r5): a mistyped/empty sf_dir must fail the
     encoding guard loudly, not pass vacuously with zero tables checked."""
@@ -501,47 +366,6 @@ def test_testdata_encoding_check_rejects_empty_dir(tmp_path):
 
     with pytest.raises(AssertionError, match="no tables"):
         check_testdata_encodings(str(tmp_path))
-
-
-def test_zordered_write_three_columns_boxes_all(spark, tmp_path):
-    """N-dim Z-order: with three cluster columns every file must cover a
-    strict sub-range of EACH column (mean span fraction well under 1),
-    so range predicates on any of the three prune files."""
-    import pyarrow.parquet as pq
-
-    from airline_data_pipeline_spark.io.readers import table
-    from airline_data_pipeline_spark.io.writers import write_parquet_zordered
-
-    li = table(spark, require_sf(SF_SMOKE), "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    path = str(tmp_path / "z3")
-    write_parquet_zordered(
-        li, path, ["l_partkey", "l_suppkey", "l_extendedprice"], num_files=27
-    )
-    spans = {c: [] for c in ("l_partkey", "l_suppkey", "l_extendedprice")}
-    for f in os.listdir(path):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        mm = {}
-        for g in range(md.num_row_groups):
-            for ci in range(md.row_group(g).num_columns):
-                col = md.row_group(g).column(ci)
-                if col.path_in_schema in spans:
-                    st = col.statistics
-                    lo, hi = mm.get(col.path_in_schema, (st.min, st.max))
-                    mm[col.path_in_schema] = (min(lo, st.min), max(hi, st.max))
-        for c, (lo, hi) in mm.items():
-            spans[c].append((lo, hi))
-    for c, ss in spans.items():
-        glo = min(s[0] for s in ss)
-        ghi = max(s[1] for s in ss)
-        mean_frac = sum((hi - lo) / max(1e-9, ghi - glo) for lo, hi in ss) / len(ss)
-        # 27 files over 3 dims -> ~1/3 of each range per file box (plus
-        # curve jumps); an unclustered dim would sit at ~1.0
-        assert mean_frac < 0.75, f"{c}: mean span fraction {mean_frac}"
-    assert spark.read.parquet(path).count() == li.count()
 
 
 def test_remote_landing_datasource_writer_two_phase_commit(spark, tmp_path):

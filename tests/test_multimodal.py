@@ -1,5 +1,5 @@
 """Multimodal binary-column plumbing tests: Arrow batch shapes, schema,
-determinism of the (stubbed) decode, exact payload dedup."""
+determinism of the (stubbed) decode."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from airline_data_pipeline_spark.multimodal.binaryops import (
     MEDIA_SCHEMA,
-    dedup_media_exact,
     extract_features,
 )
 
@@ -52,17 +51,6 @@ def test_extract_features_deterministic(media):
 def test_same_payload_same_feature(media):
     feats = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
     assert feats[100] == feats[101] == feats[102]
-
-
-def test_dedup_media_exact(media):
-    kept = dedup_media_exact(media)
-    # media_id 0's payload is bytes([0]*100), duplicated by 100/101/102 →
-    # one survivor (min id = 0)
-    ids = {r["media_id"] for r in kept.select("media_id").collect()}
-    assert 0 in ids
-    assert not {100, 101, 102} & ids
-    # dedup is idempotent
-    assert dedup_media_exact(kept).count() == kept.count()
 
 
 def test_jvm_side_hash_matches_python(media, spark):

@@ -22,7 +22,6 @@ from airline_data_pipeline_spark.operators.cleaning import (
     null_fractions,
 )
 from airline_data_pipeline_spark.operators.dedup import (
-    dedup_against_reference,
     dedup_exact_text,
     dedup_minhash,
     minhash_candidates,
@@ -222,6 +221,26 @@ def test_simhash_identical_distance_zero(docs):
     assert by_pair.get((0, 100)) == 0  # identical text → identical fingerprint
 
 
+def test_simhash_fingerprints_null_and_blank_text_are_zero(spark):
+    """NULL, empty and whitespace-only docs have no tokens and land on
+    fingerprint 0 (the oracle's COALESCE(sim, 0)); real text does not,
+    in both the default and the portable (oracle) hash forms."""
+    from airline_data_pipeline_spark.functions.text import portable_hash60
+    from airline_data_pipeline_spark.operators.dedup import simhash_fingerprints
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "the quick brown fox")],
+        "doc_id long, text string",
+    )
+    for kwargs in ({}, {"n_bits": 60, "token_hash": portable_hash60}):
+        fp = {
+            r["doc_id"]: r["__sim"]
+            for r in simhash_fingerprints(df, **kwargs).collect()
+        }
+        assert fp[1] == fp[2] == fp[3] == 0, (kwargs, fp)
+        assert fp[4] != 0, (kwargs, fp)
+
+
 def test_exact_jaccard_pairs_matches_set_arithmetic(docs):
     from airline_data_pipeline_spark.operators.dedup import exact_jaccard_pairs
 
@@ -240,10 +259,7 @@ def test_exact_jaccard_pairs_matches_set_arithmetic(docs):
 
 
 def test_connected_components_merge_transitive_chains(spark):
-    from airline_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        dedup_connected,
-    )
+    from airline_data_pipeline_spark.operators.dedup import connected_components
 
     ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     # chain 0-1-2 (0~2 NOT paired directly), star 4-{5,6}, singleton 3, 7
@@ -256,8 +272,6 @@ def test_connected_components_merge_transitive_chains(spark):
     assert out.columns == ["doc_id", "cluster_id"]
     labels = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
     assert labels == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 4, 7: 7}
-    kept = {r["doc_id"] for r in dedup_connected(ids, pairs).collect()}
-    assert kept == {0, 3, 4, 7}  # one survivor per component
 
 
 def test_prefix_filter_is_exact_and_prunes_boilerplate(spark, docs):
@@ -341,15 +355,6 @@ def test_hot_bucket_guard_simhash_and_embeddings(spark, boilerplate_docs):
     )
     assert cosine_near_dup_pairs(emb, threshold=0.99).count() == 780
     assert cosine_near_dup_pairs(emb, threshold=0.99, max_bucket_size=10).count() == 0
-
-
-def test_dedup_against_reference_anti_join(spark, docs):
-    ref = docs.filter(F.col("doc_id") < 20).select("text")
-    remaining = dedup_against_reference(docs, ref, ["text"])
-    ids = {r["doc_id"] for r in remaining.select("doc_id").collect()}
-    assert ids.isdisjoint(set(range(20)) | {100})  # 100 shares raw text with 0
-    assert {101, 102} <= ids  # case/near variants differ on raw equality
-    assert set(range(20, 30)) <= ids
 
 
 # ---------------------------------------------------------------------------
@@ -614,50 +619,6 @@ def test_repetition_ratio_degeneracy_signal(spark):
     assert rows[1] > 0.8  # 6 identical trigrams -> 5/6 repeated
     assert rows[2] == 0.0
     assert rows[3] == 0.0 and rows[4] == 0.0
-
-
-def test_redact_pii_precedence_and_placeholders(spark):
-    """PII scrub: each kind gets its typed placeholder; precedence keeps
-    an SSN from being half-eaten by the looser phone pattern and an
-    email's digits from matching as a phone."""
-    from airline_data_pipeline_spark.functions.text import pii_counts, redact_pii
-
-    rows = [
-        (1, "contact bob.smith+x@example.co.uk or call +1 (555) 123-4567 now"),
-        (2, "ssn 123-45-6789 from host 192.168.0.17"),
-        (3, "no pii here at all"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    got = {
-        r["id"]: r["red"]
-        for r in df.select("id", redact_pii(F.col("text")).alias("red")).collect()
-    }
-    assert got[1] == "contact [EMAIL] or call [PHONE] now"
-    assert got[2] == "ssn [SSN] from host [IPV4]"
-    assert got[3] == "no pii here at all"
-    counts = {
-        r["id"]: r["c"].asDict()
-        for r in df.select("id", pii_counts(F.col("text")).alias("c")).collect()
-    }
-    assert counts[1] == {"n_email": 1, "n_ssn": 0, "n_ipv4": 0, "n_phone": 1}
-    assert counts[2] == {"n_email": 0, "n_ssn": 1, "n_ipv4": 1, "n_phone": 0}
-    # precedence is carried by PII_PATTERNS order, NOT the caller's
-    # kinds order: kinds=['phone','ssn'] must still tag the SSN as
-    # [SSN], not let the phone pattern half-eat it
-    got2 = {
-        r["id"]: r["red"]
-        for r in df.select(
-            "id", redact_pii(F.col("text"), kinds=["phone", "ssn"]).alias("red")
-        ).collect()
-    }
-    assert "[SSN]" in got2[2]
-    with pytest.raises(ValueError, match="unknown PII kinds"):
-        redact_pii(F.col("text"), kinds=["ssn", "passport"])
-    # kinds=[] is rejected loudly: a scrub that scrubs nothing is a
-    # caller bug either way it's silently read (historically [] meant
-    # "all kinds"; a later revision made it "none")
-    with pytest.raises(ValueError, match="redact nothing"):
-        redact_pii(F.col("text"), kinds=[])
 
 
 def test_temperature_sample_flattens_and_is_deterministic(spark):

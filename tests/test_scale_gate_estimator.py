@@ -21,7 +21,7 @@ from __future__ import annotations
 import pytest
 
 import bench_scale
-from tests.test_scale_gate import _fit, _gate
+from tests.test_scale_gate import GATED, RELATIONAL_GATED, _fit, _gate
 
 
 class _Scripted:
@@ -85,3 +85,20 @@ def test_interleaving_order_is_per_op_pairs(monkeypatch):
 def test_fit_matches_log3_ratio():
     t = {1: {"q": 2.0}, 3: {"q": 6.0}}
     assert _fit(t, ["q"]) == {"q": 1.0}
+
+
+def test_gated_names_resolve():
+    """Every gated operator still has a runnable: the slow gate looks
+    names up in `EXTRA_FAMILY`, then the registry."""
+    from airline_data_pipeline_spark.queries.suite import registry
+
+    reg = registry()
+    assert not [n for n in GATED if n not in bench_scale.EXTRA_FAMILY and n not in reg]
+    assert not [n for n in RELATIONAL_GATED if n not in reg]
+
+
+def test_perfbench_canary_importable():
+    """perfbench's traced run calls `bench.cpu_canary_sec(spark)`."""
+    import bench
+
+    assert callable(bench.cpu_canary_sec)
