@@ -1380,9 +1380,21 @@ def connected_components(
     # this iterative operator: it is pair-sized (edges, not documents),
     # and a caller looping many CC jobs in one session can clearCache()
     # between them.
+    # Both edge directions come from ONE pass over `pairs`: a unionAll
+    # of two selects would plan the pair derivation once per branch,
+    # and exchange reuse shares only the shuffles, so everything above
+    # the last exchange (for SRP pairs, the cosine over every
+    # candidate) would run twice.
     edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                )
+            ).alias("__e")
+        )
+        .select("__e.src", "__e.dst")
         .distinct()
         .persist()
     )

@@ -14,6 +14,11 @@ Scale notes (local[N] here, 1000-executor cluster in production):
   oracle and are cluster-location independent.
 - Arrow enabled: every pandas interchange (createDataFrame, toPandas,
   pandas_udf, applyInPandas/mapInPandas) goes through columnar batches.
+- Resource shape comes from the host unless overridden:
+  `SPARK_GRAFT_CPUS` (default: the cores this process may run on) and
+  `SPARK_GRAFT_DRIVER_MEM` (default: half of physical memory). A heap
+  above physical memory lets the local JVM grow until the kernel kills
+  it instead of collecting garbage.
 """
 
 from __future__ import annotations
@@ -22,7 +27,30 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def host_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the
+    machine's core count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def driver_mem_from_meminfo(meminfo: str) -> str:
+    """Half of `MemTotal` in whole GB (rounded down), at least 1g, from
+    the text of /proc/meminfo."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            kb = int(line.split()[1])
+            return f"{max(1, kb // 2 // (1024 * 1024))}g"
+    raise ValueError("no MemTotal line in meminfo text")
+
+
+def host_driver_mem() -> str:
+    with open("/proc/meminfo") as f:
+        return driver_mem_from_meminfo(f.read())
+
+
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
 
 
 def get_spark(
@@ -68,7 +96,10 @@ def get_spark(
         .config("spark.python.use.daemon", "true")
         .config("spark.python.worker.reuse", "true")
         # --- local-mode resource shape ------------------------------
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # parquet scans: vectorized reader + pushdown are defaults,
         # pinned here so a config drift can't silently disable them.

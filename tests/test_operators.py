@@ -274,6 +274,27 @@ def test_connected_components_merge_transitive_chains(spark):
     assert labels == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 4, 7: 7}
 
 
+def test_connected_components_derives_pairs_once(spark):
+    """Both edge directions come from one evaluation of the pairs plan:
+    a Python UDF in the pair derivation runs once per pair row."""
+    from airline_data_pipeline_spark.operators.dedup import connected_components
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        calls.add(1)
+        return x
+
+    ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (4, 5), (4, 6)], "id_a long, id_b long"
+    ).select(counted("id_a").alias("id_a"), "id_b")
+    labels = {r["doc_id"]: r["cluster_id"] for r in connected_components(ids, pairs).collect()}
+    assert labels == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 4, 7: 7}
+    assert calls.value == 4
+
+
 def test_prefix_filter_is_exact_and_prunes_boilerplate(spark, docs):
     from airline_data_pipeline_spark.operators.dedup import (
         exact_jaccard_pairs,
