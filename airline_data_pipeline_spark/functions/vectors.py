@@ -37,7 +37,7 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     precompute `l2_norm` per SIDE and divide a single `dot` by the
     stored product instead — as of round 15 EVERY pair-scoring site in
     `operators/similarity.py` does (brute force, LSH, both IVF probes,
-    the PQ re-rank, and all three SRP verifies; bit-identical by
+    the PQ re-rank, and the SRP verifies; bit-identical by
     tests/test_similarity.py::test_hoisted_norm_scorers_bit_identical;
     the r14 A/B measured 1.48 s → 1.13 s on the sf0.1 label-vote
     query). This helper remains the public one-off-scoring API — do
@@ -59,8 +59,13 @@ def cosine_from_norms(
     guard as `cosine_similarity` — the pair-scoring form for callers
     that hoisted `l2_norm` per ROW below their join (the r14/r15
     discipline; every pair-scoring site in `operators/similarity.py`
-    routes through here). Bit-identical to `cosine_similarity` on the
-    same inputs when the norms are `l2_norm` of the same columns (IEEE
+    routes through here, except `cosine_near_dup_pairs`: its SRP
+    self-join verify scores whole bucket blocks in numpy with this
+    same fold, bit-identical, because per pair this interpreted fold
+    cost ~7.7 µs of core time at 64 dims and dominated the operator,
+    see `similarity._block_verify_fn`). Bit-identical to
+    `cosine_similarity` on the same inputs when the norms are
+    `l2_norm` of the same columns (IEEE
     multiplication commutes; the dot fold is element-ordered either
     way — pinned by test_hoisted_norm_scorers_bit_identical). One
     definition so a future change to the guard semantics (NaN,

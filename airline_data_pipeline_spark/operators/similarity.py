@@ -18,7 +18,12 @@ Three tiers, cheapest plan that meets recall wins:
 
 All scoring uses functions/vectors.py expressions (zip_with/aggregate);
 vectors never leave the JVM. Pandas-UDF scoring only wins for very wide
-vectors (≥1k dims) — not the default.
+vectors (≥1k dims) — not the default. One measured exception: the SRP
+self-join verify of `cosine_near_dup_pairs` at 64 dims. Its unique
+candidates saturate (1.9M of the 2.0M pairs of 2,000 vectors), so it
+scores each (tbl, bucket) block in one numpy pass instead of one
+interpreted fold per pair (sf0.1 1x/3x: 8.2/31.1 s → 2.3-3.3/5.2-6.3 s
+on 4 cores, same rows and cosines).
 """
 
 from __future__ import annotations
@@ -183,7 +188,8 @@ def _bucketize(df, id_alias: str, vec_col: str, dims: int, n_bits: int, n_tables
     the bucket join and candidate dedup shuffle 12-byte keys, and
     vectors are joined back only for the rows that survive (at ≥1k dims
     that is the difference between shuffling kilobytes and bytes per
-    candidate)."""
+    candidate). `cosine_near_dup_pairs` joins them on afterwards, per
+    bucket row, for its per-block verify (see its docstring)."""
     udf = _srp_buckets_udf(dims, n_bits, n_tables)
     return df.select(
         F.col(id_alias),
@@ -2219,6 +2225,86 @@ def ivf_pq_scores_against_loaded_index(
     )
 
 
+# rows x columns of one verify chunk: a block of m members is scored
+# in row slices of max(1, _VERIFY_CHUNK_PAIRS // m) rows, so even an
+# uncapped 100k-member bucket holds a few MB per slice, never m² x dims
+_VERIFY_CHUNK_PAIRS = 1 << 18
+
+# numpy twins of the element types `dot` folds: Spark multiplies
+# array<float> elements in float and widens the product into the double
+# accumulator, so the products must round in float32 here too
+_DOT_DTYPES = {"float": np.float32, "double": np.float64}
+
+
+def _block_verify_fn(id_col: str, vec_col: str, threshold: float, dtype):
+    """applyInPandas body for `cosine_near_dup_pairs`: one (tbl, bucket)
+    block in, its id-ordered pairs at cosine ≥ threshold out.
+
+    Bit-identical to `cosine_from_norms(a, b, l2_norm(a), l2_norm(b))`:
+    the norms arrive precomputed by Spark's own `l2_norm`, and the dot
+    is the same sequential left-to-right fold (`acc + x*y`, one
+    dimension per numpy step, IEEE double accumulator, products in the
+    element type). No BLAS or pairwise summation, whose reassociation
+    would move the last bits. Spark's `>=` sorts NaN above every
+    number, so a NaN cosine passes any threshold; numpy's `>=` already
+    fails a number against a NaN threshold, as Spark's does.
+
+    Self-contained on purpose: the closure pickles by value, so the
+    Python workers never import this package."""
+
+    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col, kind="stable")
+        ids = pdf[id_col].to_numpy()
+        norms = pdf["__n"].to_numpy(np.float64)
+        vecs = pdf[vec_col].to_numpy()
+        lengths = np.fromiter(map(len, vecs), np.int64, len(vecs))
+        out = []
+        # `zip_with` pads a shorter array with NULL, so pairs of unequal
+        # lengths score NULL and drop: only same-length rows pair up
+        for width in np.unique(lengths):
+            sel = np.flatnonzero(lengths == width)
+            m = len(sel)
+            if m < 2:
+                continue
+            xt = np.ascontiguousarray(
+                np.stack(vecs[sel]).astype(dtype, copy=False).T
+            )
+            bid, bnorm = ids[sel], norms[sel]
+            step = max(1, _VERIFY_CHUNK_PAIRS // m)
+            for r0 in range(0, m - 1, step):
+                r1 = min(m, r0 + step)
+                acc = np.zeros((r1 - r0, m - r0))
+                prod = np.empty(acc.shape, dtype)
+                for k in range(width):
+                    np.multiply(xt[k, r0:r1, None], xt[k, None, r0:], out=prod)
+                    acc += prod
+                denom = bnorm[r0:r1, None] * bnorm[None, r0:]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = acc / denom
+                    keep = (
+                        (bid[None, r0:] > bid[r0:r1, None])
+                        & (denom != 0)
+                        & ((cos >= threshold) | np.isnan(cos))
+                    )
+                i, j = np.nonzero(keep)
+                out.append(
+                    pd.DataFrame(
+                        {
+                            "id_a": bid[r0 + i],
+                            "id_b": bid[r0 + j],
+                            "cosine": cos[i, j],
+                        }
+                    )
+                )
+        if not out:
+            return pd.DataFrame(
+                {"id_a": ids[:0], "id_b": ids[:0], "cosine": norms[:0]}
+            )
+        return pd.concat(out, ignore_index=True)
+
+    return verify
+
+
 def cosine_near_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -2231,53 +2317,71 @@ def cosine_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-space near-duplicate pairs (id_a < id_b, cosine ≥ t).
 
-    SRP-LSH candidates (high-cosine pairs collide with high probability)
-    then exact cosine verify — same candidates→verify shape as the text
-    dedup family. The candidate self-join and dedup shuffle (id_a, id_b)
-    only; vectors join back for the surviving pairs. ``max_bucket_size``
-    drops degenerate buckets (see `cap_hot_buckets`).
+    SRP-LSH buckets (high-cosine pairs collide with high probability),
+    then an exact cosine verify per (tbl, bucket) block: the vectors
+    and their Spark-computed `l2_norm` ride onto the checkpointed
+    bucket rows, and one `applyInPandas` call scores each block's
+    id-ordered pairs in one vectorised numpy pass (row chunks of
+    `_VERIFY_CHUNK_PAIRS`, see `_block_verify_fn` for the bit-identity
+    to `cosine_from_norms`). Only the pairs at or above ``threshold``
+    leave the block, and only they are deduplicated across tables.
+    Ids are assumed unique; NULL ids, and vectors whose norm is NULL
+    (a NULL vector or element), pair with nothing. Element types are
+    float or double.
+
+    Why the vectors ride to the block instead of joining back onto
+    deduplicated candidate pairs: the candidate set saturates. With 24
+    tables of 8 buckets nearly every pair of 2,000 vectors collides
+    somewhere (1.9M unique candidates), so the verify, not the bucket
+    join, sets the wall time, and Spark evaluates the `zip_with` +
+    `aggregate` dot by interpretation at ~7.7 µs of core time per
+    64-dim pair. Per block the fold runs over whole rows at once:
+    `bench_scale.bench_embedding_dedup` at sf0.1 1x/3x went from
+    8.2/31.1 s to 2.3-3.3/5.2-6.3 s on a 4-core host, with the same
+    rows and cosines. The cost is a 24x replicated vector shuffle
+    (rows x tables x dims), cheap at 64 dims against the per-pair
+    dot. ``max_bucket_size`` drops degenerate buckets (see
+    `cap_hot_buckets`).
     """
+    vtype = df.schema[vec_col].dataType
+    etype = getattr(vtype, "elementType", None)
+    dtype = _DOT_DTYPES.get(etype.simpleString() if etype else None)
+    if dtype is None:
+        raise TypeError(
+            f"cosine_near_dup_pairs needs array<float> or array<double>, "
+            f"got {vtype.simpleString()}"
+        )
     base = df.select(F.col(id_col), F.col(vec_col))
     # _reuse BEFORE the cap (see dedup_minhash): the SRP matmul UDF
-    # otherwise runs once per self-join side — and a third time for the
-    # hot-bucket count when max_bucket_size is set
+    # otherwise runs a second time for the hot-bucket count when
+    # max_bucket_size is set
     buck = cap_hot_buckets(
         _reuse(_bucketize(base, id_col, vec_col, dims, n_bits, n_tables)),
         ["tbl", "bucket"], max_bucket_size,
     )
-    a, b = buck.alias("a"), buck.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    # norms per ROW, in Spark (one HOF fold per vector, never per pair);
+    # a NULL norm would reach numpy as NaN and pass, so it drops here
+    vecs = base.withColumn("__n", l2_norm(F.col(vec_col))).filter(
+        F.col("__n").isNotNull()
     )
-    # norms per ROW below the verify join (the lsh_scores discipline),
-    # never per candidate pair
-    va = base.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
-    ).withColumn("__an", l2_norm(F.col("__va")))
-    vb = base.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")
-    ).withColumn("__bn", l2_norm(F.col("__vb")))
+    id_type = df.schema[id_col].dataType.simpleString()
     return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn(
-            "cosine",
-            cosine_from_norms(
-                F.col("__va"), F.col("__vb"), F.col("__an"), F.col("__bn")
-            ),
+        buck.join(vecs, id_col)
+        .groupBy("tbl", "bucket")
+        .applyInPandas(
+            _block_verify_fn(id_col, vec_col, threshold, dtype),
+            f"id_a {id_type}, id_b {id_type}, cosine double",
         )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+        # the pandas->Arrow return path writes NaN as NULL; no NULL
+        # cosine is ever emitted, so a NULL here is a NaN cosine
+        .withColumn("cosine", F.coalesce("cosine", F.lit(float("nan"))))
+        # a pair's cosine is the same in every block it collides in (and
+        # never -0.0, so key normalization moves no value): a whole-row
+        # distinct is the dedup on (id_a, id_b). Not dropDuplicates on
+        # the pair: its first(cosine) rewrite gets a new attribute that
+        # a later exceptAll fails to bind (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND,
+        # Spark 4.1)
+        .distinct()
     )
 
 

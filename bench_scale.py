@@ -50,11 +50,21 @@ def bench_embedding_dedup(spark, sf_dir):
     CPU). An ANN index's width is a function of corpus size — like
     every production LSH deployment, the bucket count must track n.
     Here: n_bits = log2(n / 250) keeps ~250 vectors/bucket at every
-    scale (expected pairs per bucket constant, bucket count ∝ n →
-    total candidates ~linear), and max_bucket_size=2000 backstops
-    skewed buckets. The recall/bits tradeoff (more bits = fewer
-    per-table collisions) is the documented LSH dial; n_tables stays
-    at the registry's 24.
+    scale (expected pairs per bucket constant, bucket count ∝ n), and
+    max_bucket_size=2000 backstops skewed buckets. The recall/bits
+    tradeoff (more bits = fewer per-table collisions) is the documented
+    LSH dial; n_tables stays at the registry's 24.
+
+    What the dial keeps near linear is the bucket-join EMISSIONS: at
+    sf0.1 1x/3x (2,000/6,000 vectors, 3/5 bits) they are 6.1M/14.5M
+    (x2.4). The UNIQUE candidate pairs, the union over the 24 tables,
+    are not: at 1x that union is saturated, since a near-orthogonal
+    pair shares at least one bucket with probability 1-(7/8)^24 = 0.96
+    at 3 bits against 1-(31/32)^24 = 0.53 at 5 bits. Unique candidates
+    go 1.9M → 9.7M (x5.1). A verify that costs per unique pair
+    therefore fits an exponent well above 1 here;
+    `cosine_near_dup_pairs` verifies per bucket block instead, whose
+    cost follows the emissions.
     """
     import math
 

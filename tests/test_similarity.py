@@ -160,6 +160,74 @@ def test_near_dup_pairs_verified_scores(emb):
     assert all(r["id_a"] < r["id_b"] for r in rows)
 
 
+def _near_dup_truth(df, threshold):
+    """Brute force in Spark: every pair with id_a < id_b whose
+    `cosine_from_norms` (per-row `l2_norm`) is ≥ threshold."""
+    from airline_data_pipeline_spark.functions.vectors import (
+        cosine_from_norms,
+        l2_norm,
+    )
+
+    v = df.withColumn("n", l2_norm(F.col("embedding")))
+    a, b = v.alias("a"), v.alias("b")
+    return (
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            cosine_from_norms(
+                F.col("a.embedding"), F.col("b.embedding"),
+                F.col("a.n"), F.col("b.n"),
+            ).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
+def _exact_rows(df):
+    # repr round-trips a double exactly and makes NaN equal to NaN
+    return sorted((r["id_a"], r["id_b"], repr(r["cosine"])) for r in df.collect())
+
+
+@pytest.mark.parametrize("element", ["double", "float"])
+def test_near_dup_pairs_equal_brute_force_exactly(spark, element):
+    """At guaranteed recall (0 bits: every table is one bucket holding
+    every vector) the per-block verify returns exactly the brute-force
+    pairs, cosines equal as doubles. The data holds a zero vector
+    (NULL cosine, excluded), exact duplicates (cosine 1.0), a NaN
+    component (NaN cosine, which passes `>=` as in Spark), and one
+    bucket larger than the verify's row chunk, so the chunked path
+    runs; 2 tables exercise the cross-table dedup."""
+    import random
+
+    from airline_data_pipeline_spark.operators import similarity
+
+    dims, n = 8, 600
+    assert similarity._VERIFY_CHUNK_PAIRS // n < n  # several row chunks
+    rng = random.Random(11)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(dims)]) for i in range(n)]
+    rows[5] = (5, [0.0] * dims)
+    rows[7] = (7, list(rows[3][1]))
+    rows[9] = (9, list(rows[3][1]))
+    rows[11] = (11, [float("nan")] + rows[12][1][1:])
+    df = spark.createDataFrame(
+        rows, f"vec_id long, embedding array<{element}>"
+    )
+    t = 0.5
+    got = _exact_rows(
+        cosine_near_dup_pairs(df, threshold=t, dims=dims, n_bits=0, n_tables=2)
+    )
+    want = _exact_rows(_near_dup_truth(df, t))
+    assert got == want
+    ids = {(a, b) for a, b, _ in got}
+    assert (3, 7) in ids and (7, 9) in ids
+    # the zero vector's denominator is 0 (NULL cosine) except against
+    # the NaN vector, where 0 * NaN = NaN passes the `!= 0` guard
+    assert {pair for pair in ids if 5 in pair} == {(5, 11)}
+    assert {c for a, b, c in got if 11 in (a, b)} == {"nan"}
+    assert sum(11 in pair for pair in ids) == n - 1
+
+
 def test_asof_pandas_variant_with_tolerance(spark):
     from airline_data_pipeline_spark.operators.asof import asof_join_pandas
     import pandas as pd
